@@ -7,6 +7,18 @@ static 8-32g memory blocks) with one factory that turns on Adaptive Query
 Execution (runtime partition coalescing + skew-join handling) and Arrow for
 every pandas-UDF exchange.  On a real cluster the same factory is used; only
 ``master`` changes.
+
+Python workers: every PySpark task starts with ``importlib.invalidate_caches()``,
+which on CPython 3.11/3.12 re-reads the central directory of every zip on the
+worker's import path (``pyspark.zip`` once per imported subpackage, the
+5k-entry spark-core jar twice): 200-300 ms per task before its UDF runs, most
+of a small ``batch_infer`` request. Local sessions therefore start their Python
+workers through :mod:`~pyspark_text_classification_spark.worker_daemon`, which
+re-reads an archive only when its mtime or size changed. Cluster executors
+keep the stock daemon, because they need not have this package installed.
+The package's parent directory goes on the workers' ``PYTHONPATH`` (Spark puts
+it after its own zips and the caller's ``PYTHONPATH``), so workers import the
+engine from any working directory.
 """
 
 from __future__ import annotations
@@ -16,6 +28,8 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_session(
@@ -32,11 +46,14 @@ def get_session(
     - ANSI off inside the engine's own sessions for permissive casts
       (queries themselves still use try_cast so they also run under a
       driver-provided ANSI session).
+    - Python workers import the engine from any working directory; local
+      sessions start them through ``worker_daemon`` (module docstring).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    master = master or f"local[{cpus}]"
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
+        .master(master)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -53,7 +70,13 @@ def get_session(
             "spark.sql.warehouse.dir",
             os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/spark_graft_warehouse"),
         )
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
+    if master.startswith("local"):
+        builder = builder.config(
+            "spark.python.daemon.module",
+            "pyspark_text_classification_spark.worker_daemon",
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
