@@ -24,8 +24,10 @@ lifecycle — fully real and testable.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
-from typing import Protocol
+import threading
+from collections import OrderedDict
+from collections.abc import Callable, Hashable, Iterator
+from typing import Any, Protocol
 
 import pandas as pd
 
@@ -60,7 +62,25 @@ class DeterministicStubModel:
         return labels, confs
 
 
-_MODEL_CACHE: dict[tuple[str, str], TextClassifier] = {}
+# entries per process in each cache below; a retrain adds a key
+_CACHE_BOUND = 4
+
+_MODEL_CACHE: OrderedDict[tuple[str, str], TextClassifier] = OrderedDict()
+_UDF_CACHE: OrderedDict[tuple, Any] = OrderedDict()
+_CACHE_LOCK = threading.Lock()  # a serving driver may call from many threads
+
+
+def _lru(cache: OrderedDict, key: Hashable, build: Callable[[], Any]) -> Any:
+    """``cache[key]``, built on a miss; past ``_CACHE_BOUND`` entries the
+    least recently used one is dropped."""
+    with _CACHE_LOCK:
+        if key in cache:
+            cache.move_to_end(key)
+            return cache[key]
+        value = cache[key] = build()
+        if len(cache) > _CACHE_BOUND:
+            cache.popitem(last=False)
+        return value
 
 
 def _get_model(factory: Callable[[], TextClassifier]) -> TextClassifier:
@@ -73,16 +93,55 @@ def _get_model(factory: Callable[[], TextClassifier]) -> TextClassifier:
     exactly the reference defect this module exists to fix. Classes and
     module-level functions pickle by reference and name-key identically.
     Two DIFFERENT factories must therefore be distinct named functions,
-    not one closure instantiated with different captured state."""
+    not one closure instantiated with different captured state.
+
+    The cache is a bounded LRU: each retrain gets a new digest key, and a
+    long-lived worker keeps only the ``_CACHE_BOUND`` most recent models."""
     key = (
         getattr(factory, "__module__", "?"),
         getattr(factory, "__qualname__", repr(factory)),
     )
-    model = _MODEL_CACHE.get(key)
-    if model is None:
-        model = factory()
-        _MODEL_CACHE[key] = model
-    return model
+    return _lru(_MODEL_CACHE, key, factory)
+
+
+def _score(model: TextClassifier, ids: pd.Series, texts: pd.Series) -> pd.DataFrame:
+    """One Arrow batch through ``model``. A null or NaN text gets a null
+    label and confidence; the batch's other rows are scored as usual."""
+    missing = texts.isna().to_numpy()
+    if not missing.any():
+        labels, confs = model.predict(texts.tolist())
+        labels = pd.array(labels, dtype="int32")
+        confs = pd.array(confs, dtype="float64")
+    else:
+        keep = ~missing
+        got_labels, got_confs = model.predict(texts[keep].tolist())
+        labels = pd.array([None] * len(texts), dtype="Int32")
+        confs = pd.array([None] * len(texts), dtype="Float64")
+        labels[keep] = got_labels
+        confs[keep] = got_confs
+    return pd.DataFrame(
+        {"doc_id": ids, "predicted_label": labels, "confidence": confs}
+    )
+
+
+def _infer_udf(
+    model_factory: Callable[[], TextClassifier], text_col: str, id_col: str
+) -> Any:
+    """The ``SQL_MAP_PANDAS_ITER_UDF`` that ``mapInPandas`` would build,
+    made once so its JVM function is reused across requests."""
+    from pyspark.sql.functions import pandas_udf
+    from pyspark.util import PythonEvalType
+
+    def infer(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        model = _get_model(model_factory)
+        for pdf in batches:
+            yield _score(model, pdf[id_col], pdf[text_col])
+
+    return pandas_udf(
+        infer,
+        returnType=INFER_SCHEMA,
+        functionType=PythonEvalType.SQL_MAP_PANDAS_ITER_UDF,
+    )
 
 
 def batch_infer(
@@ -96,27 +155,30 @@ def batch_infer(
     No shuffle, no grouped-map, no driver collection: Arrow batches flow
     partition-local through the Python worker. At 100 TB the parallelism
     is the input partition count; repartition upstream only if partitions
-    are too coarse for the model's throughput.
-    """
-    def infer(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        model = _get_model(model_factory)
-        for pdf in batches:
-            labels, confs = model.predict(pdf[text_col].tolist())
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "predicted_label": pd.array(labels, dtype="int32"),
-                    "confidence": pd.array(confs, dtype="float64"),
-                }
-            )
+    are too coarse for the model's throughput. A driver-local input (a
+    pandas-built request) keeps Spark's own split (see ``fan_out``).
 
+    A null or NaN text gets a null ``predicted_label`` and ``confidence``
+    instead of failing the request.
+
+    The plan is built once per model: the pandas UDF, and with it the
+    pickled factory and its JVM function, is cached per (application,
+    ``model_factory``, ``text_col``, ``id_col``) in a bounded LRU, so a
+    request pays only for attaching it to the input's plan. Keying on the
+    applicationId keeps a restarted session from reusing a dead function.
+    """
     from pyspark_text_classification_spark.sources.parquet import fan_out
 
-    # fan_out: a single-file scan would otherwise feed ONE Python worker;
-    # no-op for streaming inputs and already-parallel scans
-    return fan_out(df.select(id_col, text_col)).mapInPandas(
-        infer, schema=INFER_SCHEMA
-    )
+    spark = df.sparkSession
+    # fan_out (a single-file scan would otherwise feed ONE Python worker)
+    # before the select: isLocal() only holds at the LocalRelation itself
+    src = fan_out(df).select(id_col, text_col)
+    key = (spark.sparkContext.applicationId, model_factory, text_col, id_col)
+    udf = _lru(_UDF_CACHE, key, lambda: _infer_udf(model_factory, text_col, id_col))
+    col = udf(src[id_col], src[text_col])
+    # DataFrame.mapInPandas minus its per-call pandas_udf: the same JVM call
+    # pyspark/sql/pandas/map_ops.py makes (re-check on a PySpark upgrade)
+    return DataFrame(src._jdf.mapInPandas(col._jc, False, None), spark)  # noqa: SLF001
 
 
 # ---------------------------------------------------------------------------

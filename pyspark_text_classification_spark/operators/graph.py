@@ -135,7 +135,7 @@ def _pair_lists(spark: SparkSession, sf_dir: str) -> DataFrame:
             e.groupBy("c")
             .agg(F.sort_array(F.collect_set("s")).alias("ss"))
             .filter((F.size("ss") >= 2) & (F.size("ss") <= AA_HUB_CAP)),
-            2,
+            per_core=2,
         )
 
     return shared_intermediate(spark, sf_dir, "graph_pair_lists", build)
@@ -563,7 +563,11 @@ KCORE_ROUNDS = 3  # bounded peeling rounds (fixed so the oracle unrolls)
 
 def _sql_peel(prev: str) -> str:
     """One peeling round as a CTE body: drop nodes with degree < k in the
-    edge set induced by ``{prev}``'s surviving nodes."""
+    edge set induced by ``{prev}``'s surviving nodes.
+
+    The body reads ``{prev}`` three times, so the oracle declares every
+    round ``AS MATERIALIZED``: inlined, each round would re-expand its
+    predecessor three times over and DuckDB runs out of memory."""
     return f"""
       SELECT e.u, e.v FROM {prev} e
       JOIN (
@@ -598,15 +602,15 @@ def _sql_peel(prev: str) -> str:
       GROUP BY 1, 2
       HAVING count(*) >= {TRI_MIN_COMMON}
     ),
-    g0 AS (
+    g0 AS MATERIALIZED (
       SELECT u, v FROM (
         SELECT u, v, row_number() OVER (ORDER BY w DESC, u, v) AS rnk
         FROM se0
       ) WHERE rnk <= {TRI_EDGE_TOPK}
     ),
-    g1 AS ({_sql_peel('g0')}),
-    g2 AS ({_sql_peel('g1')}),
-    g3 AS ({_sql_peel('g2')})
+    g1 AS MATERIALIZED ({_sql_peel('g0')}),
+    g2 AS MATERIALIZED ({_sql_peel('g1')}),
+    g3 AS MATERIALIZED ({_sql_peel('g2')})
     SELECT 0 AS round,
            (SELECT CAST(count(DISTINCT node) AS BIGINT) FROM
              (SELECT u AS node FROM g0 UNION ALL SELECT v FROM g0)) AS n_nodes,

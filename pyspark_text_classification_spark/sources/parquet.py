@@ -44,7 +44,8 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 
 
 def fan_out(df: DataFrame, per_core: int = 1) -> DataFrame:
-    """Round-robin repartition to cluster parallelism.
+    """Round-robin repartition to cluster parallelism (``per_core`` tasks
+    per core).
 
     Small single-file parquet inputs arrive as ONE partition; any
     compute-heavy per-row work downstream (higher-order-function folds,
@@ -53,8 +54,13 @@ def fan_out(df: DataFrame, per_core: int = 1) -> DataFrame:
     Cheap for small inputs, and for large inputs the repartition cost is
     dwarfed by the compute it parallelizes. Row values are unchanged —
     round-robin repartition sorts batches locally for determinism.
+
+    A driver-local input (``isLocal()``, e.g. a pandas-built
+    ``LocalRelation``) is returned as is: Spark already splits it over
+    ``min(rows, defaultParallelism)`` tasks, and probing its partition
+    count would build a Python RDD on every call.
     """
-    if df.isStreaming:  # partition count is the source's concern per batch
+    if df.isStreaming or df.isLocal():  # the source's or Spark's own split
         return df
     target = df.sparkSession.sparkContext.defaultParallelism * per_core
     return df.repartition(target) if df.rdd.getNumPartitions() < target else df

@@ -6,7 +6,10 @@ from __future__ import annotations
 
 import os
 import tempfile
+from collections import OrderedDict
 
+import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -16,8 +19,10 @@ from pyspark_text_classification_spark.ml.evaluate import (
     top_k_coefficients,
 )
 from pyspark_text_classification_spark.ml.featurize import EmptyTokenGuard
+from pyspark_text_classification_spark.ml import inference
 from pyspark_text_classification_spark.ml.inference import (
     DeterministicStubModel,
+    ExportedScorerFactory,
     batch_infer,
 )
 from pyspark_text_classification_spark.ml.pipelines import fit_text_classifier
@@ -166,6 +171,138 @@ def test_model_loads_once_per_worker_not_per_task(spark, tmp_path):
     assert all(n == 1 for n in loads_per_worker), (
         f"a worker loaded the model more than once: {loads_per_worker}"
     )
+
+
+def _tiny_export(intercept: float = 0.0) -> dict:
+    """A hand-built export_lr_scorer dict: two weighted terms, no fit."""
+    return {
+        "min_token_length": 1,
+        "stopwords": frozenset({"the"}),
+        "vocab": {"good": 0, "bad": 1},
+        "idf": [1.0, 1.5],
+        "coef": [2.0, -2.0],
+        "intercept": intercept,
+    }
+
+
+def test_model_cache_is_a_bounded_lru(monkeypatch):
+    """Each retrain gets a new digest key; a long-lived worker keeps only
+    the most recent models instead of every model it ever served."""
+    monkeypatch.setattr(inference, "_MODEL_CACHE", OrderedDict())
+    bound = inference._CACHE_BOUND
+    factories = [
+        ExportedScorerFactory(_tiny_export(float(i))) for i in range(bound + 1)
+    ]
+    models = [inference._get_model(f) for f in factories]
+
+    keys = [(f.__module__, f.__qualname__) for f in factories]
+    assert len(inference._MODEL_CACHE) == bound
+    assert keys[0] not in inference._MODEL_CACHE
+    assert keys[-1] in inference._MODEL_CACHE
+    assert inference._get_model(factories[-1]) is models[-1]
+
+
+def test_lru_stays_bounded_under_concurrent_callers():
+    """Threads sharing one cache (a threaded serving driver) never see a
+    lost entry or an overfull cache."""
+    import sys
+    import threading
+
+    cache: OrderedDict = OrderedDict()
+    errors: list[BaseException] = []
+
+    def hammer(offset: int) -> None:
+        try:
+            for i in range(2000):
+                key = (offset + i) % (2 * inference._CACHE_BOUND)
+                assert inference._lru(cache, key, lambda: key) == key
+                assert len(cache) <= inference._CACHE_BOUND
+        except BaseException as exc:  # reported by the main thread
+            errors.append(exc)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [
+            threading.Thread(target=hammer, args=(k,)) for k in range(16)
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors[0]
+
+
+@pytest.mark.parametrize(
+    "factory",
+    [DeterministicStubModel, ExportedScorerFactory(_tiny_export())],
+    ids=["stub", "exported_lr"],
+)
+def test_batch_infer_serves_null_and_nan_text_as_null(spark, factory):
+    """A null or NaN text gets a null label and confidence; every other
+    row of the request is served exactly as the model scores it alone."""
+    texts = ["good film", None, "the bad ending", float("nan"), "good good"]
+    pdf = pd.DataFrame({"doc_id": np.arange(len(texts)), "text": texts})
+    got = {
+        r.doc_id: (r.predicted_label, r.confidence)
+        for r in batch_infer(
+            spark.createDataFrame(pdf), model_factory=factory
+        ).collect()
+    }
+    assert got[1] == got[3] == (None, None)
+    model = factory()
+    for i in (0, 2, 4):
+        labels, confs = model.predict([texts[i]])
+        assert got[i] == (labels[0], confs[0])
+
+
+def test_batch_infer_builds_udf_once_per_model(spark, monkeypatch):
+    """Repeat requests reuse the pandas UDF's JVM function: pyspark's
+    _wrap_function (pickle the factory, build SimplePythonFunction) runs
+    once per (model, columns), not once per request."""
+    import pyspark.sql.udf as udf_module
+
+    wraps = []
+    wrap_function = udf_module._wrap_function
+
+    def counting(*args, **kwargs):
+        wraps.append(1)
+        return wrap_function(*args, **kwargs)
+
+    monkeypatch.setattr(udf_module, "_wrap_function", counting)
+    n = 40
+    pdf = pd.DataFrame(
+        {
+            "doc_id": np.arange(n),
+            "text": [f"text number {i}" for i in range(n)],
+            "title": [f"title {i}" for i in range(n)],
+        }
+    )
+
+    def serve(**kwargs):
+        out = batch_infer(spark.createDataFrame(pdf), **kwargs)
+        return sorted(out.collect())
+
+    def factory():
+        return DeterministicStubModel()
+
+    def other_factory():
+        return DeterministicStubModel()
+
+    served = [serve(model_factory=factory) for _ in range(5)]
+    assert len(wraps) == 1
+    assert all(rows == served[0] for rows in served)
+    assert len(served[0]) == n
+
+    serve(model_factory=other_factory)
+    assert len(wraps) == 2
+    serve(model_factory=factory, text_col="title")
+    assert len(wraps) == 3
+    serve(model_factory=factory)
+    assert len(wraps) == 3
 
 
 def test_pipeline_model_save_load_roundtrip(spark, tmp_path):

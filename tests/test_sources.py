@@ -18,7 +18,11 @@ from pyspark_text_classification_spark.sources.csv import (
     normalize_columns,
     read_tsv,
 )
-from pyspark_text_classification_spark.sources.parquet import write_parquet
+from pyspark_text_classification_spark.sources.parquet import (
+    fan_out,
+    load_table,
+    write_parquet,
+)
 
 
 def test_read_tsv_plain(spark, tmp_path):
@@ -53,6 +57,32 @@ def test_normalize_columns(spark):
     )
     assert out.columns == ["text", "context", "label"]
     assert out.first().text == "q?"
+
+
+def test_fan_out_keeps_local_input_without_rdd_probe(spark, monkeypatch):
+    """A pandas-built request is a LocalRelation that Spark already splits
+    over min(rows, defaultParallelism) tasks: fan_out hands back the same
+    DataFrame and never builds a Python RDD to count its partitions."""
+    import pandas as pd
+
+    df = spark.createDataFrame(
+        pd.DataFrame({"doc_id": [1, 2, 3], "text": ["a", "b", "c"]})
+    )
+
+    def no_rdd(self):
+        raise AssertionError("fan_out built a Python RDD")
+
+    monkeypatch.setattr(type(df), "rdd", property(no_rdd))
+    assert fan_out(df) is df
+
+
+def test_fan_out_repartitions_single_file_scan(spark, sf_dir):
+    docs = load_table(spark, sf_dir, "documents")
+    assert docs.rdd.getNumPartitions() == 1  # one small parquet file
+    assert (
+        fan_out(docs).rdd.getNumPartitions()
+        == spark.sparkContext.defaultParallelism
+    )
 
 
 def test_parquet_roundtrip_partitioned(spark, tmp_path):
