@@ -29,6 +29,7 @@ from collections import OrderedDict
 from collections.abc import Callable, Hashable, Iterator
 from typing import Any, Protocol
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
@@ -83,44 +84,48 @@ def _lru(cache: OrderedDict, key: Hashable, build: Callable[[], Any]) -> Any:
         return value
 
 
-def _get_model(factory: Callable[[], TextClassifier]) -> TextClassifier:
-    """Per-worker lazy singleton: one model load per Python worker process,
-    not per task (the reference reloads per task deserialization).
+def _model_key(factory: Callable[[], TextClassifier]) -> tuple[str, str]:
+    """A factory's cache identity: its (module, qualname), always hashable.
 
-    Keyed by the factory's (module, qualname), NOT ``id(factory)``: every
-    task deserializes its own copy of a closure-captured factory, so an
-    identity key would miss on every task and silently reload per task —
-    exactly the reference defect this module exists to fix. Classes and
-    module-level functions pickle by reference and name-key identically.
-    Two DIFFERENT factories must therefore be distinct named functions,
-    not one closure instantiated with different captured state.
-
-    The cache is a bounded LRU: each retrain gets a new digest key, and a
-    long-lived worker keeps only the ``_CACHE_BOUND`` most recent models."""
-    key = (
+    NOT ``id(factory)``: every task deserializes its own copy of a
+    closure-captured factory, so an identity key would miss on every task
+    and silently reload per task — exactly the reference defect this
+    module exists to fix. Classes and module-level functions pickle by
+    reference and name-key identically; an instance without a
+    ``__qualname__`` falls back to its ``repr``. Two DIFFERENT factories
+    must therefore be distinct named functions (or carry a content
+    digest in their qualname, as :class:`ExportedScorerFactory` does),
+    not one closure instantiated with different captured state."""
+    return (
         getattr(factory, "__module__", "?"),
         getattr(factory, "__qualname__", repr(factory)),
     )
-    return _lru(_MODEL_CACHE, key, factory)
+
+
+def _get_model(factory: Callable[[], TextClassifier]) -> TextClassifier:
+    """Per-worker lazy singleton: one model load per Python worker process,
+    not per task (the reference reloads per task deserialization), keyed by
+    :func:`_model_key`.
+
+    The cache is a bounded LRU: each retrain gets a new digest key, and a
+    long-lived worker keeps only the ``_CACHE_BOUND`` most recent models."""
+    return _lru(_MODEL_CACHE, _model_key(factory), factory)
 
 
 def _score(model: TextClassifier, ids: pd.Series, texts: pd.Series) -> pd.DataFrame:
     """One Arrow batch through ``model``. A null or NaN text gets a null
     label and confidence; the batch's other rows are scored as usual."""
-    missing = texts.isna().to_numpy()
-    if not missing.any():
-        labels, confs = model.predict(texts.tolist())
-        labels = pd.array(labels, dtype="int32")
-        confs = pd.array(confs, dtype="float64")
-    else:
-        keep = ~missing
-        got_labels, got_confs = model.predict(texts[keep].tolist())
-        labels = pd.array([None] * len(texts), dtype="Int32")
-        confs = pd.array([None] * len(texts), dtype="Float64")
-        labels[keep] = got_labels
-        confs[keep] = got_confs
+    keep = texts.notna().to_numpy()
+    labels = np.zeros(len(texts), dtype="int32")
+    confs = np.zeros(len(texts), dtype="float64")
+    if keep.any():
+        labels[keep], confs[keep] = model.predict(texts[keep].tolist())
     return pd.DataFrame(
-        {"doc_id": ids, "predicted_label": labels, "confidence": confs}
+        {
+            "doc_id": ids,
+            "predicted_label": pd.arrays.IntegerArray(labels, ~keep),
+            "confidence": pd.arrays.FloatingArray(confs, ~keep),
+        }
     )
 
 
@@ -163,9 +168,11 @@ def batch_infer(
 
     The plan is built once per model: the pandas UDF, and with it the
     pickled factory and its JVM function, is cached per (application,
-    ``model_factory``, ``text_col``, ``id_col``) in a bounded LRU, so a
-    request pays only for attaching it to the input's plan. Keying on the
-    applicationId keeps a restarted session from reusing a dead function.
+    ``model_factory``'s name key — the one the worker's model cache uses,
+    see ``_model_key`` — ``text_col``, ``id_col``) in a bounded LRU, so a
+    request pays only for attaching it to the input's plan, also when it
+    rebuilds its factory from the same export. Keying on the applicationId
+    keeps a restarted session from reusing a dead function.
     """
     from pyspark_text_classification_spark.sources.parquet import fan_out
 
@@ -173,7 +180,8 @@ def batch_infer(
     # fan_out (a single-file scan would otherwise feed ONE Python worker)
     # before the select: isLocal() only holds at the LocalRelation itself
     src = fan_out(df).select(id_col, text_col)
-    key = (spark.sparkContext.applicationId, model_factory, text_col, id_col)
+    app = spark.sparkContext.applicationId
+    key = (app, *_model_key(model_factory), text_col, id_col)
     udf = _lru(_UDF_CACHE, key, lambda: _infer_udf(model_factory, text_col, id_col))
     col = udf(src[id_col], src[text_col])
     # DataFrame.mapInPandas minus its per-call pandas_udf: the same JVM call

@@ -135,7 +135,7 @@ def _pair_lists(spark: SparkSession, sf_dir: str) -> DataFrame:
             e.groupBy("c")
             .agg(F.sort_array(F.collect_set("s")).alias("ss"))
             .filter((F.size("ss") >= 2) & (F.size("ss") <= AA_HUB_CAP)),
-            per_core=2,
+            2,
         )
 
     return shared_intermediate(spark, sf_dir, "graph_pair_lists", build)

@@ -44,8 +44,7 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 
 
 def fan_out(df: DataFrame, per_core: int = 1) -> DataFrame:
-    """Round-robin repartition to cluster parallelism (``per_core`` tasks
-    per core).
+    """Round-robin repartition to cluster parallelism.
 
     Small single-file parquet inputs arrive as ONE partition; any
     compute-heavy per-row work downstream (higher-order-function folds,

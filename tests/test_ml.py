@@ -259,21 +259,25 @@ def test_batch_infer_serves_null_and_nan_text_as_null(spark, factory):
         assert got[i] == (labels[0], confs[0])
 
 
-def test_batch_infer_builds_udf_once_per_model(spark, monkeypatch):
-    """Repeat requests reuse the pandas UDF's JVM function: pyspark's
-    _wrap_function (pickle the factory, build SimplePythonFunction) runs
-    once per (model, columns), not once per request."""
+@pytest.fixture
+def udf_builds(monkeypatch):
+    """Counts pyspark's _wrap_function calls (pickle the factory, build
+    its SimplePythonFunction) over an empty classify-UDF cache."""
     import pyspark.sql.udf as udf_module
 
-    wraps = []
+    builds = []
     wrap_function = udf_module._wrap_function
 
     def counting(*args, **kwargs):
-        wraps.append(1)
+        builds.append(1)
         return wrap_function(*args, **kwargs)
 
     monkeypatch.setattr(udf_module, "_wrap_function", counting)
-    n = 40
+    monkeypatch.setattr(inference, "_UDF_CACHE", OrderedDict())
+    return builds
+
+
+def _serve_rows(spark, n: int = 40, **kwargs) -> list:
     pdf = pd.DataFrame(
         {
             "doc_id": np.arange(n),
@@ -281,10 +285,12 @@ def test_batch_infer_builds_udf_once_per_model(spark, monkeypatch):
             "title": [f"title {i}" for i in range(n)],
         }
     )
+    return sorted(batch_infer(spark.createDataFrame(pdf), **kwargs).collect())
 
-    def serve(**kwargs):
-        out = batch_infer(spark.createDataFrame(pdf), **kwargs)
-        return sorted(out.collect())
+
+def test_batch_infer_builds_udf_once_per_model(spark, udf_builds):
+    """Repeat requests reuse the pandas UDF's JVM function: it is built
+    once per (model, columns), not once per request."""
 
     def factory():
         return DeterministicStubModel()
@@ -292,17 +298,45 @@ def test_batch_infer_builds_udf_once_per_model(spark, monkeypatch):
     def other_factory():
         return DeterministicStubModel()
 
-    served = [serve(model_factory=factory) for _ in range(5)]
-    assert len(wraps) == 1
+    served = [_serve_rows(spark, model_factory=factory) for _ in range(5)]
+    assert len(udf_builds) == 1
     assert all(rows == served[0] for rows in served)
-    assert len(served[0]) == n
+    assert len(served[0]) == 40
 
-    serve(model_factory=other_factory)
-    assert len(wraps) == 2
-    serve(model_factory=factory, text_col="title")
-    assert len(wraps) == 3
-    serve(model_factory=factory)
-    assert len(wraps) == 3
+    _serve_rows(spark, model_factory=other_factory)
+    assert len(udf_builds) == 2
+    _serve_rows(spark, model_factory=factory, text_col="title")
+    assert len(udf_builds) == 3
+    _serve_rows(spark, model_factory=factory)
+    assert len(udf_builds) == 3
+
+
+def test_batch_infer_keys_its_udf_on_the_factory_name(spark, udf_builds):
+    """The UDF cache uses the worker model cache's name key, not the
+    factory object: an unhashable (dataclass) factory serves, and a
+    factory rebuilt from the same export reuses the cached function."""
+    from dataclasses import dataclass
+
+    @dataclass
+    class StubFactory:  # eq=True leaves it unhashable
+        name: str
+
+        def __call__(self) -> DeterministicStubModel:
+            return DeterministicStubModel()
+
+    stub_rows = _serve_rows(spark, model_factory=DeterministicStubModel)
+    builds = len(udf_builds)
+    assert _serve_rows(spark, model_factory=StubFactory("a")) == stub_rows
+    assert _serve_rows(spark, model_factory=StubFactory("a")) == stub_rows
+    assert len(udf_builds) == builds + 1
+    _serve_rows(spark, model_factory=StubFactory("b"))
+    assert len(udf_builds) == builds + 2
+
+    export = _tiny_export(0.25)
+    first = _serve_rows(spark, model_factory=ExportedScorerFactory(export))
+    again = _serve_rows(spark, model_factory=ExportedScorerFactory(dict(export)))
+    assert again == first
+    assert len(udf_builds) == builds + 3
 
 
 def test_pipeline_model_save_load_roundtrip(spark, tmp_path):
