@@ -55,310 +55,3 @@ import pyspark_text_classification_spark.streaming.cusum  # noqa: F401
 import pyspark_text_classification_spark.streaming.latedrop  # noqa: F401
 import pyspark_text_classification_spark.streaming.ttl  # noqa: F401
 from pyspark_text_classification_spark.registry import ORACLES, QUERIES  # noqa: F401
-
-# --- Driver-sweep ordering -------------------------------------------------
-# The grading driver hash-checks exactly the first 50 registered queries
-# (CORRECTNESS_r{1,2}.json keys == QUERIES keys[0:50]).  Rounds 1-2 covered
-# 76 distinct queries; the 73 never-driver-checked ones are rotated to the
-# front here so round 3 checks 50 of them (plus q26_approx_sketches, whose
-# only driver row ever was round 1's error, since fixed), and round 4 can
-# finish the remaining 24.  Repo-side pytest runs the identical oracle check
-# over ALL queries regardless of this order.
-_DRIVER_FIRST = [
-    # q26: fixed after its round-1 error row; needs a green driver row.
-    "q26_approx_sketches",
-    # similarity family (11) - never driver-checked.
-    "similarity_cosine_topk",
-    "similarity_lsh_buckets",
-    "similarity_ann_lsh",
-    "similarity_near_dup",
-    "similarity_dedup_clusters",
-    "similarity_ann_ivf",
-    "similarity_quantize_int8",
-    "similarity_hard_negatives",
-    "similarity_kmeans_step",
-    "similarity_search_topk",
-    "similarity_recall_eval",
-    # streaming twins (14) - never driver-checked.
-    "ml_infer_stream",
-    "dedup_stream_exact",
-    "events_stream_tumbling_hourly",
-    "events_stream_sliding_1h_15m",
-    "events_stream_value_zscore",
-    "events_stream_ohlc_hourly",
-    "events_stream_range_join",
-    "pipeline_stream_quality_filter",
-    "events_stream_sessionize",
-    "events_stream_closed_sessions",
-    "similarity_stream_near_dup",
-    "text_stream_kl_drift",
-    "pipeline_stream_checksum",
-    "events_stream_time_to_convert",
-    # multimodal (6) - never driver-checked.
-    "multimodal_meta",
-    "multimodal_byte_features",
-    "multimodal_frame_sample",
-    "multimodal_resize",
-    "multimodal_dedup_exact",
-    "multimodal_embed_topk",
-    # q30-q41 + skew probe (13) - never driver-checked.
-    "q30_salted_skew_agg",
-    "q31_salted_join",
-    "q32_star_join_revenue",
-    "q33_pricing_summary",
-    "q34_large_order_customers",
-    "q35_promo_revenue_share",
-    "q36_sql_frontend",
-    "q37_bination_trade",
-    "q38_brand_price_spread",
-    "q39_disjunctive_predicates",
-    "q40_monthly_revenue_trend",
-    "q41_customer_rfm",
-    "pipeline_skew_probe",
-    # events tail picks to fill slot 50 - never driver-checked.
-    "events_asof_join",
-    "events_range_join",
-    "events_value_zscore",
-    "events_ohlc_hourly",
-    "events_time_to_convert",
-    # ---- slot 50 boundary; below still never-checked, for round 4 ----
-    "events_retention_unpivot",
-    "events_activity_gaps",
-    "events_transition_matrix",
-    "events_gap_fill",
-    "events_rolling_active_users",
-    "events_mad_anomaly",
-    "events_value_deciles",
-    "events_seasonal_baseline",
-    "events_type_affinity",
-    "pipeline_zorder_key",
-    "pipeline_decontaminate",
-    "pipeline_full_prep",
-    "pipeline_mixture_sample",
-    "pipeline_validate",
-    "pipeline_length_buckets",
-    "pipeline_weighted_sample",
-    "pipeline_table_checksum",
-    "pipeline_cdc_merge",
-    "pipeline_snapshot_diff",
-    "pipeline_kanonymity_audit",
-    "ml_doc_embedding",
-    "ml_calibration_bins",
-    "ml_kfold_assign",
-    "text_keywords_topk",
-    # round-3 additions (never driver-checked yet) - keep behind the
-    # slot-50 boundary so they don't displace this round's target set;
-    # round 4 should rotate everything after the boundary to the front.
-    "q42_priority_late_ship",
-    "q43_customer_order_distribution",
-    "q44_small_quantity_revenue",
-    "q45_idle_rich_customers",
-    "q46_top_supplier",
-    "q47_shipping_priority",
-    "q48_returned_items",
-    "q49_forecast_revenue",
-    "similarity_pq_codes",
-    "similarity_pq_adc_topk",
-    "text_bpe_merge_step",
-    "similarity_pq_recall",
-    "similarity_stream_pq_codes",
-    "q50_market_share",
-    "q51_nation_profit",
-    "q52_sole_late_supplier",
-    "dedup_boilerplate",
-    "text_domain_mixture",
-    "events_stream_enrich",
-    "pipeline_diverse_sample",
-    "ml_infer_exported",
-    "similarity_ivf_pq",
-    "similarity_ivf_pq_recall",
-    "dedup_winnowing",
-    "graph_triangle_count",
-    "sketch_kmv_intersection",
-    "events_scd2_intervals",
-    "retrieval_phrase_match",
-    "events_stream_scd2",
-    "source_python_datasource",
-    "source_python_stream",
-    "pipeline_shard_manifest",
-    "events_watermark_audit",
-    "ml_pca_power_iter",
-    "similarity_ivf_pq_rerank",
-    "similarity_rerank_recall",
-    "dedup_stream_ingest",
-    "events_abtest_ztest",
-    "events_pit_join",
-    "events_attribution",
-    "graph_kcore_peel",
-    "q58_window_extras",
-    "ml_naive_bayes_confusion",
-    "ml_nb_langid_confusion",
-    "pipeline_chunk_overlap",
-    "dedup_threshold_sweep",
-    "events_markov_stationary",
-]
-
-
-def _apply_driver_order() -> None:
-    missing = [n for n in _DRIVER_FIRST if n not in QUERIES]
-    if missing:  # fail loudly: a rename would silently waste a driver round
-        raise KeyError(f"_DRIVER_FIRST names not registered: {missing}")
-    ordered = {n: QUERIES[n] for n in _DRIVER_FIRST}
-    ordered.update({n: f for n, f in QUERIES.items() if n not in ordered})
-    QUERIES.clear()
-    QUERIES.update(ordered)
-
-
-# ROUND_RECHECK (r12): the 44 queries whose execution path changed in
-# the second optimization round — all hash-neutral by design and all
-# locally re-driven MATCH post-change (full registry 285/285 OK at
-# sf0.01; the 41-query similarity/PQ family additionally MATCHed at
-# sf0.001) — listed because their recorded greens predate the new
-# plans.  The changes: (1) bounded-broadcast variants of
-# candidate_cosines (query-side broadcast at the batch-capped serving
-# sites; zero-corpus-shuffle rescore for the bounded rerank
-# shortlists), (2) session-cached BM25/tfidf top-k lists consumed by
-# the fusion/eval/expansion queries, (3) the similarity builders
-# re-parsed as single SQL expressions (bit-identical trees; touches
-# every query that builds norms, ranks, IVF assignments or in-row
-# argmax folds — hence the whole family re-drives), (4) the explicit
-# ann_bounded flag in _recall_vs_exact (behavior-identical).  44
-# rechecks leave 6 first-sweep slots for the stalest-green rotation.
-ROUND_RECHECK = [
-    "similarity_ann_ivf",
-    "similarity_recall_eval",
-    "similarity_pq_codes",
-    "similarity_pq_adc_topk",
-    "similarity_pq_recall",
-    "similarity_stream_pq_codes",
-    "similarity_ivf_pq",
-    "similarity_ivf_pq_recall",
-    "similarity_ivf_pq_rerank",
-    "similarity_rerank_recall",
-    "similarity_ann_ivf_auto",
-    "similarity_filtered_ann",
-    "similarity_ivf_append_recall",
-    "similarity_ann_ivf_auto_recall",
-    "similarity_nprobe_sweep",
-    "similarity_ivf_delete",
-    "similarity_ivf_delete_recall",
-    "similarity_stream_ivf_delete",
-    "similarity_ivf_pq_auto",
-    "similarity_ivf_pq_auto_recall",
-    "similarity_auto_rerank_recall",
-    "similarity_knn_classify",
-    "similarity_knn_regression",
-    "similarity_knn_sweep",
-    "similarity_kmeans_iter3",
-    "similarity_kcenter_init",
-    "similarity_cosine_topk",
-    "similarity_kmeans_auto",
-    "similarity_ivf_append",
-    "similarity_stream_ivf_append",
-    "similarity_lsh_buckets",
-    "similarity_ann_lsh",
-    "similarity_near_dup",
-    "similarity_dedup_clusters",
-    "similarity_quantize_int8",
-    "similarity_hard_negatives",
-    "similarity_kmeans_step",
-    "similarity_search_topk",
-    "similarity_stream_near_dup",
-    "dedup_semantic",
-    "dedup_semantic_auto",
-    "retrieval_rrf_fusion",
-    "retrieval_ndcg_eval",
-    "retrieval_query_expansion",
-]
-
-
-def coverage_priority(
-    names: list[str],
-    artifacts: list[dict],
-    oracled: set[str] | None = None,
-    recheck: tuple[str, ...] | list[str] = (),
-) -> list[str]:
-    """Stable sort of ``names`` by driver-coverage need: queries whose
-    LATEST artifact row is RED (err or failed match) first — an error in
-    the permanent record is the most urgent thing to overwrite with a
-    green — then ``recheck`` names (code changed this round, greens
-    stale by construction), then queries never driver-checked, then
-    settled greens ordered STALEST FIRST (by the round of their latest
-    row) so re-drive slots refresh the oldest evidence before recent
-    greens.  ``artifacts`` must be in round order (oldest first): the
-    most recent record wins, so a regression (green in r1, red later)
-    re-queues first rather than settling on the stale green.  Relative
-    order within each class is preserved, so the hand-tuned
-    _DRIVER_FIRST order remains the tiebreak.  ``oracled`` (when given)
-    is the set of queries that NOW have an oracle: a rows-only
-    'no_oracle' row only settles a query that still has no oracle — if
-    one was added since, the stronger hash check is pending and the
-    query re-queues at the front."""
-    settled: dict[str, bool] = {}
-    last_seen: dict[str, int] = {}
-    for i, data in enumerate(artifacts):
-        for name, rec in data.items():
-            if not isinstance(rec, dict):
-                continue
-            ok = (
-                rec.get("err") is None
-                and bool(rec.get("hash_match", rec.get("rows_match")))
-            ) or (
-                # no-oracle queries: the driver records err='no_oracle'
-                # with the row count — that IS their green, unless an
-                # oracle has been added since the row was recorded.
-                rec.get("err") == "no_oracle"
-                and rec.get("spark_rows") is not None
-                and (oracled is None or name not in oracled)
-            )
-            settled[name] = ok  # latest round wins
-            last_seen[name] = i
-
-    rech = set(recheck)
-
-    def key(n: str) -> tuple[int, int]:
-        if n in settled and not settled[n]:
-            return (0, 0)  # red re-queues FIRST
-        if n in rech:
-            return (1, 0)  # changed this round: green is stale
-        if n not in settled:
-            return (2, 0)  # never driver-checked
-        return (3, last_seen[n])  # greens: stalest evidence first
-    return sorted(names, key=key)
-
-
-def _apply_artifact_aware_order() -> None:
-    """Rotate the registry so each round's first-50 driver sweep lands on
-    maximum-new-information queries, using the rounds' own CORRECTNESS
-    artifacts (committed at the repo root) as the record of what has
-    already been checked.  With r1+r2 artifacts this reproduces round 3's
-    hand-built rotation exactly; every later round advances automatically
-    — no manual reorder, no wasted driver slots.  No artifacts (fresh
-    clone, pytest sandbox) -> the static order stands."""
-    import glob
-    import json
-    import os
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    artifacts = []
-    for p in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-        try:
-            with open(p) as fh:
-                artifacts.append(json.load(fh))
-        except (OSError, ValueError):  # unreadable artifact: skip, not fatal
-            continue
-    if not artifacts:
-        return
-    ordered = {
-        n: QUERIES[n]
-        for n in coverage_priority(
-            list(QUERIES), artifacts, oracled=set(ORACLES),
-            recheck=ROUND_RECHECK,
-        )
-    }
-    QUERIES.clear()
-    QUERIES.update(ordered)
-
-
-_apply_driver_order()
-_apply_artifact_aware_order()

@@ -32,6 +32,59 @@ from pyspark_text_classification_spark.sources.parquet import load_table
 FUNNEL_STEPS = ("view", "click", "purchase")
 
 
+def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return load_table(spark, sf_dir, "events").select(
+        "user_id", "event_type", ts_us().alias("ts_us")
+    )
+
+
+def _step_counts(ev: DataFrame, window_us: int | None = None) -> DataFrame:
+    """One row (n1, n2, n3): the users who reached each of FUNNEL_STEPS
+    in order, over ``ev`` (user_id, event_type, ts_us).
+
+    Step N is min(ts_us) per user over step-N events at-or-after the
+    user's step N-1 time and, given ``window_us``, strictly before that
+    time plus the window.  The user-keyed joins share one hash
+    partitioning; the counts come from one global conditional aggregate
+    over the tagged union of the three stages."""
+
+    def after(prev_t: str):
+        cond = F.col("ts_us") >= F.col(prev_t)
+        if window_us is not None:
+            cond = cond & (F.col("ts_us") < F.col(prev_t) + window_us)
+        return cond
+
+    s1 = (
+        ev.filter(F.col("event_type") == FUNNEL_STEPS[0])
+        .groupBy("user_id")
+        .agg(F.min("ts_us").alias("t1"))
+    )
+    s2 = (
+        ev.filter(F.col("event_type") == FUNNEL_STEPS[1])
+        .join(s1, "user_id")
+        .filter(after("t1"))
+        .groupBy("user_id")
+        .agg(F.min("ts_us").alias("t2"))
+    )
+    s3 = (
+        ev.filter(F.col("event_type") == FUNNEL_STEPS[2])
+        .join(s2, "user_id")
+        .filter(after("t2"))
+        .groupBy("user_id")
+        .agg(F.min("ts_us").alias("t3"))
+    )
+    tall = (
+        s1.select(F.lit(1).alias("step"))
+        .unionByName(s2.select(F.lit(2).alias("step")))
+        .unionByName(s3.select(F.lit(3).alias("step")))
+    )
+    return tall.agg(
+        F.sum(F.when(F.col("step") == 1, 1).otherwise(0)).alias("n1"),
+        F.sum(F.when(F.col("step") == 2, 1).otherwise(0)).alias("n2"),
+        F.sum(F.when(F.col("step") == 3, 1).otherwise(0)).alias("n3"),
+    )
+
+
 @query(
     "events_funnel_steps",
     oracle=f"""
@@ -89,38 +142,7 @@ def events_funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
     guards the conversion divisions so an empty previous step degrades
     to NULL identically in both engines instead of erroring (ANSI
     div-by-zero)."""
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", "event_type", ts_us().alias("ts_us")
-    )
-    s1 = (
-        ev.filter(F.col("event_type") == FUNNEL_STEPS[0])
-        .groupBy("user_id")
-        .agg(F.min("ts_us").alias("t1"))
-    )
-    s2 = (
-        ev.filter(F.col("event_type") == FUNNEL_STEPS[1])
-        .join(s1, "user_id")
-        .filter(F.col("ts_us") >= F.col("t1"))
-        .groupBy("user_id")
-        .agg(F.min("ts_us").alias("t2"))
-    )
-    s3 = (
-        ev.filter(F.col("event_type") == FUNNEL_STEPS[2])
-        .join(s2, "user_id")
-        .filter(F.col("ts_us") >= F.col("t2"))
-        .groupBy("user_id")
-        .agg(F.min("ts_us").alias("t3"))
-    )
-    tall = (
-        s1.select(F.lit(1).alias("step"))
-        .unionByName(s2.select(F.lit(2).alias("step")))
-        .unionByName(s3.select(F.lit(3).alias("step")))
-    )
-    wide = tall.agg(
-        F.sum(F.when(F.col("step") == 1, 1).otherwise(0)).alias("n1"),
-        F.sum(F.when(F.col("step") == 2, 1).otherwise(0)).alias("n2"),
-        F.sum(F.when(F.col("step") == 3, 1).otherwise(0)).alias("n3"),
-    )
+    wide = _step_counts(_events(spark, sf_dir))
     return wide.selectExpr(
         f"""stack(3,
           1, '{FUNNEL_STEPS[0]}', CAST(n1 AS BIGINT),
@@ -190,44 +212,7 @@ def events_funnel_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer bound on each stage's filter, which at 100 TB also BOUNDS
     per-user state for the streaming twin (expired steps are evictable
     the way the sessionizer evicts idle sessions)."""
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", "event_type", ts_us().alias("ts_us")
-    )
-    s1 = (
-        ev.filter(F.col("event_type") == FUNNEL_STEPS[0])
-        .groupBy("user_id")
-        .agg(F.min("ts_us").alias("t1"))
-    )
-    s2 = (
-        ev.filter(F.col("event_type") == FUNNEL_STEPS[1])
-        .join(s1, "user_id")
-        .filter(
-            (F.col("ts_us") >= F.col("t1"))
-            & (F.col("ts_us") < F.col("t1") + FUNNEL_WINDOW_US)
-        )
-        .groupBy("user_id")
-        .agg(F.min("ts_us").alias("t2"))
-    )
-    s3 = (
-        ev.filter(F.col("event_type") == FUNNEL_STEPS[2])
-        .join(s2, "user_id")
-        .filter(
-            (F.col("ts_us") >= F.col("t2"))
-            & (F.col("ts_us") < F.col("t2") + FUNNEL_WINDOW_US)
-        )
-        .groupBy("user_id")
-        .agg(F.min("ts_us").alias("t3"))
-    )
-    tall = (
-        s1.select(F.lit(1).alias("step"))
-        .unionByName(s2.select(F.lit(2).alias("step")))
-        .unionByName(s3.select(F.lit(3).alias("step")))
-    )
-    wide = tall.agg(
-        F.sum(F.when(F.col("step") == 1, 1).otherwise(0)).alias("n1"),
-        F.sum(F.when(F.col("step") == 2, 1).otherwise(0)).alias("n2"),
-        F.sum(F.when(F.col("step") == 3, 1).otherwise(0)).alias("n3"),
-    )
+    wide = _step_counts(_events(spark, sf_dir), FUNNEL_WINDOW_US)
     return wide.selectExpr(
         f"""stack(3,
           1, '{FUNNEL_STEPS[0]}', CAST(n1 AS BIGINT), CAST(10000 AS BIGINT),

@@ -587,6 +587,52 @@ def _sql_peel(prev: str) -> str:
     """
 
 
+def _kcore_trajectory(g: DataFrame) -> DataFrame:
+    """(round, n_nodes, n_edges) of the edge frame ``g`` (u, v) and of
+    each of {KCORE_ROUNDS} {KCORE_K}-core peeling rounds after it: a round
+    keeps the edges whose endpoints both have degree >= k in the previous
+    round's edges — the Spark twin of the ``_sql_peel`` chain."""
+
+    def census(edges: DataFrame, rnd: int) -> DataFrame:
+        nodes = edges.select(F.col("u").alias("node")).unionByName(
+            edges.select(F.col("v").alias("node"))
+        )
+        return nodes.agg(
+            F.lit(rnd).alias("round"),
+            F.count_distinct("node").alias("n_nodes"),
+            (F.count("*") / 2).cast("long").alias("n_edges"),
+        )
+
+    out = census(g, 0)
+    for rnd in range(1, KCORE_ROUNDS + 1):
+        deg = (
+            g.select(F.col("u").alias("node"))
+            .unionByName(g.select(F.col("v").alias("node")))
+            .groupBy("node")
+            .agg(F.count("*").alias("d"))
+        )
+        survivors = deg.filter(F.col("d") >= KCORE_K).select("node")
+        # the survivor set is <= the backbone's node count (bounded by
+        # TRI_EDGE_TOPK edges) — broadcast both semi-joins so a round
+        # shuffles nothing but the degree aggregate
+        g = (
+            g.join(
+                F.broadcast(survivors.withColumnRenamed("node", "u")),
+                "u",
+                "left_semi",
+            )
+            .join(
+                F.broadcast(survivors.withColumnRenamed("node", "v")),
+                "v",
+                "left_semi",
+            )
+            .select("u", "v")
+            .localCheckpoint(eager=True)
+        )
+        out = out.unionByName(census(g, rnd))
+    return out
+
+
 @query(
     "graph_kcore_peel",
     oracle=f"""
@@ -644,46 +690,7 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     Rounds are FIXED at {KCORE_ROUNDS} so the DuckDB oracle unrolls the
     recurrence exactly; a production run loops to fixpoint with the
     identical per-round dataflow."""
-    g = _copurchase_backbone(spark, sf_dir)  # session-cached checkpoint
-
-    def census(edges: DataFrame, rnd: int) -> DataFrame:
-        nodes = edges.select(F.col("u").alias("node")).unionByName(
-            edges.select(F.col("v").alias("node"))
-        )
-        return nodes.agg(
-            F.lit(rnd).alias("round"),
-            F.count_distinct("node").alias("n_nodes"),
-            (F.count("*") / 2).cast("long").alias("n_edges"),
-        )
-
-    out = census(g, 0)
-    for rnd in range(1, KCORE_ROUNDS + 1):
-        deg = (
-            g.select(F.col("u").alias("node"))
-            .unionByName(g.select(F.col("v").alias("node")))
-            .groupBy("node")
-            .agg(F.count("*").alias("d"))
-        )
-        survivors = deg.filter(F.col("d") >= KCORE_K).select("node")
-        # the survivor set is <= the backbone's node count (bounded by
-        # TRI_EDGE_TOPK edges) — broadcast both semi-joins so a round
-        # shuffles nothing but the degree aggregate
-        g = (
-            g.join(
-                F.broadcast(survivors.withColumnRenamed("node", "u")),
-                "u",
-                "left_semi",
-            )
-            .join(
-                F.broadcast(survivors.withColumnRenamed("node", "v")),
-                "v",
-                "left_semi",
-            )
-            .select("u", "v")
-            .localCheckpoint(eager=True)
-        )
-        out = out.unionByName(census(g, rnd))
-    return out
+    return _kcore_trajectory(_copurchase_backbone(spark, sf_dir))
 
 
 JACCARD_TOPK = 100

@@ -31,6 +31,9 @@ def sf_dir() -> str:
 @pytest.fixture(scope="session")
 def oracle_con():
     con = duckdb.connect()
+    # bounded: an oracle that blows up fails fast, naming its query,
+    # instead of exhausting the host's memory
+    con.execute("SET memory_limit='2GB'")
     for t in TESTDATA_TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"

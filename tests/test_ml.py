@@ -11,6 +11,7 @@ from collections import OrderedDict
 import numpy as np
 import pandas as pd
 import pytest
+from hypothesis import HealthCheck, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from pyspark_text_classification_spark.ml.evaluate import (
@@ -384,7 +385,31 @@ def test_write_comparison_report(tmp_path):
     assert isinstance(on_disk[0]["accuracy"], float)  # numbers, not strings
 
 
-def test_exported_scorer_matches_mllib_transform(spark, sf_dir):
+@pytest.fixture(scope="module")
+def sst2_fit(spark, sf_dir):
+    """(labeled documents, sst2 PipelineModel fitted on them), fitted once."""
+    from pyspark_text_classification_spark.ml.queries import (
+        _labeled_documents,
+    )
+
+    labeled = _labeled_documents(spark, sf_dir)
+    return labeled, fit_text_classifier(labeled, recipe="sst2")
+
+
+def _assert_serving_parity(want, got):
+    """want/got: key -> (label, p1) from transform() / (label, confidence)
+    from the exported scorer.  Confidence to 1e-9; labels exactly away
+    from the 0.5 boundary."""
+    assert set(got) == set(want)
+    for key, (label, p1) in want.items():
+        g_label, g_conf = got[key]
+        w_conf = p1 if label else 1.0 - p1
+        assert abs(g_conf - w_conf) < 1e-9, (key, g_conf, w_conf)
+        if abs(p1 - 0.5) > 1e-9:
+            assert g_label == label, (key, p1)
+
+
+def test_exported_scorer_matches_mllib_transform(spark, sf_dir, sst2_fit):
     """Train-export-serve parity: the exported-weights scorer served
     through batch_infer must reproduce the fitted PipelineModel's own
     transform() — labels exactly (away from the 0.5 boundary) and
@@ -394,20 +419,10 @@ def test_exported_scorer_matches_mllib_transform(spark, sf_dir):
     from pyspark.ml.functions import vector_to_array
 
     from pyspark_text_classification_spark.ml.inference import (
-        ExportedScorerFactory,
-        batch_infer,
         export_lr_scorer,
     )
-    from pyspark_text_classification_spark.ml.pipelines import (
-        fit_text_classifier,
-    )
-    from pyspark_text_classification_spark.ml.queries import (
-        _labeled_documents,
-    )
-    from pyspark_text_classification_spark.sources.parquet import load_table
 
-    labeled = _labeled_documents(spark, sf_dir)
-    model = fit_text_classifier(labeled, recipe="sst2")
+    labeled, model = sst2_fit
     want = {
         r.doc_id: (int(r.prediction), float(r.p1))
         for r in model.transform(labeled)
@@ -428,10 +443,61 @@ def test_exported_scorer_matches_mllib_transform(spark, sf_dir):
         ).collect()
     }
 
-    assert set(got) == set(want)
-    for doc_id, (label, p1) in want.items():
-        g_label, g_conf = got[doc_id]
-        w_conf = p1 if label else 1.0 - p1
-        assert abs(g_conf - w_conf) < 1e-9, (doc_id, g_conf, w_conf)
-        if abs(p1 - 0.5) > 1e-9:
-            assert g_label == label, (doc_id, p1)
+    _assert_serving_parity(want, got)
+
+
+# non-ASCII letters whose lowercase differs between engines if either
+# side got Unicode handling wrong: dotted capital I (lowercases to two
+# code points), sharp s, the Kelvin sign (lowercases to ASCII 'k'),
+# full-width Latin, final sigma, a ligature
+_NON_ASCII = ["İ", "ß", "\u212a", "Ｋｅｙ", "ｗ", "ΟΔΟΣ", "ﬁ", "é", "Ⅻ"]
+_PUNCT = st.text(alphabet="!?.,;:'\"()[]{}-_*/\\@#&%$^~` \t\n", max_size=12)
+
+
+@settings(
+    max_examples=15,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(data=st.data())
+def test_exported_scorer_matches_mllib_on_adversarial_text(
+    spark, sst2_fit, data
+):
+    """The exported scorer reproduces transform() on text built to split
+    the engines: vocabulary words in any case glued to non-ASCII letters
+    (Java's ASCII \\W vs Python's Unicode one, Java vs Python
+    lowercasing), punctuation-only and empty texts, and long repeats of
+    one high-idf term (extreme margins)."""
+    from pyspark.ml.functions import vector_to_array
+
+    from pyspark_text_classification_spark.ml.inference import (
+        ExportedLRScorer,
+        export_lr_scorer,
+    )
+
+    _, model = sst2_fit
+    export = export_lr_scorer(model)
+    vocab, idf = export["vocab"], export["idf"]
+    high_idf = sorted(vocab, key=lambda t: idf[vocab[t]], reverse=True)[:20]
+    word = st.sampled_from(list(vocab)).flatmap(
+        lambda w: st.sampled_from([w, w.upper(), w.title()])
+    )
+    affix = st.sampled_from(["", *_NON_ASCII])
+    glued = st.tuples(affix, word, affix).map("".join)
+    sentence = st.lists(st.one_of(glued, _PUNCT), max_size=8).map(" ".join)
+    repeat = st.tuples(
+        st.sampled_from(high_idf), st.integers(50, 3000)
+    ).map(lambda tn: " ".join([tn[0]] * tn[1]))
+    texts = data.draw(
+        st.lists(st.one_of(sentence, _PUNCT, st.just(""), repeat),
+                 min_size=1, max_size=8)
+    )
+
+    rows = model.transform(
+        spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    ).select(
+        "doc_id", "prediction", vector_to_array("probability")[1].alias("p1")
+    ).collect()
+    want = {r.doc_id: (int(r.prediction), float(r.p1)) for r in rows}
+    labels, confs = ExportedLRScorer(export).predict(texts)
+    _assert_serving_parity(want, dict(enumerate(zip(labels, confs))))

@@ -481,6 +481,65 @@ def test_inrow_pair_generation_equals_self_join(spark, sf_dir):
     assert joined.exceptAll(inrow).count() == 0
 
 
+def test_kcore_trajectory_peels_like_the_sql_chain(spark):
+    """graph_kcore_peel's twin never peels at the test scale (every round
+    reads the same backbone), so the peel is checked here on a built
+    graph: a (k+1)-clique core plus a chain p_1..p_R of pendant nodes
+    that each drop below degree k one round after their predecessor is
+    peeled.  The Spark rounds must equal DuckDB's _sql_peel chain over
+    the same edges and lose nodes every round."""
+    import duckdb
+    import pandas as pd
+
+    from pyspark_text_classification_spark.operators.graph import (
+        KCORE_K,
+        KCORE_ROUNDS,
+        _kcore_trajectory,
+        _sql_peel,
+    )
+
+    k = KCORE_K
+    core = range(k + 1)
+    edges = [(u, v) for u in core for v in core if u < v]
+    chain = [100 + i for i in range(KCORE_ROUNDS)]
+    for i, p in enumerate(chain):
+        # k-2 core edges plus its chain neighbours; the last p has one
+        # neighbour, so it takes one more core edge to reach degree k
+        n_core = k - 1 if i == len(chain) - 1 else k - 2
+        edges += [(c, p) for c in core[:n_core]]
+    edges += list(zip(chain, chain[1:]))
+
+    got = [
+        tuple(r)
+        for r in _kcore_trajectory(
+            spark.createDataFrame(edges, "u long, v long")
+        )
+        .orderBy("round")
+        .select("round", "n_nodes", "n_edges")
+        .collect()
+    ]
+
+    con = duckdb.connect()
+    con.register("edges", pd.DataFrame(edges, columns=["u", "v"]))
+    con.execute("CREATE TABLE g0 AS SELECT u, v FROM edges")
+    want = []
+    for rnd in range(KCORE_ROUNDS + 1):
+        if rnd:
+            con.execute(f"CREATE TABLE g{rnd} AS {_sql_peel(f'g{rnd - 1}')}")
+        want.append((rnd, *con.execute(
+            f"""SELECT (SELECT count(DISTINCT node) FROM
+                  (SELECT u AS node FROM g{rnd} UNION ALL
+                   SELECT v FROM g{rnd})),
+                (SELECT count(*) FROM g{rnd})"""
+        ).fetchone()))
+    con.close()
+
+    assert got == want
+    n_nodes = [n for _, n, _ in got]
+    assert n_nodes == sorted(set(n_nodes), reverse=True), n_nodes
+    assert n_nodes[-1] == k + 1
+
+
 def test_shared_intermediate_semantics(spark, sf_dir):
     """plans.shared contract: (1) one build per (session, sf, name) — the
     builder runs once and later calls reuse the checkpoint; (2) slot
