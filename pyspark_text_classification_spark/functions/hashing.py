@@ -160,14 +160,3 @@ def word_shingles(tokens: Column, k: int = 3) -> Column:
     )
     return F.when(F.size(tokens) < k, whole).otherwise(grams)
 
-
-def sql_word_shingles(tokens_expr: str, k: int = 3) -> str:
-    """DuckDB twin of :func:`word_shingles` (1-indexed list slicing)."""
-    return (
-        f"CASE WHEN length({tokens_expr}) < {k} "
-        f"THEN [array_to_string({tokens_expr}, ' ')] "
-        f"ELSE list_transform("
-        f"range(1, length({tokens_expr}) - {k - 1} + 1), "
-        f"i -> array_to_string(list_slice({tokens_expr}, i, i + {k - 1}), ' ')) "
-        f"END"
-    )

@@ -154,20 +154,27 @@ def _pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf0.1).  On a corpus whose supplier dimension itself is huge, this
     slot is the one to demote back to per-query aggregation — the
     queries only ever take bounded top-k slices of it."""
-    def build() -> DataFrame:
-        warr = F.array(*[F.lit(w) for _, w in AA_WEIGHTS])
-        lists = _pair_lists(spark, sf_dir).withColumn(
-            "w_micro", F.element_at(warr, F.size("ss") - 1)
-        )
-        pairs = lists.select(
-            F.explode(F.expr(_PAIR_EXPLODE)).alias("k"), "w_micro"
-        )
-        return pairs.groupBy("k").agg(
-            F.count("*").alias("w"),
-            F.sum("w_micro").alias("aa_micro"),
-        )
+    return shared_intermediate(
+        spark,
+        sf_dir,
+        "graph_pair_stats",
+        lambda: _build_pair_stats(spark, sf_dir),
+    )
 
-    return shared_intermediate(spark, sf_dir, "graph_pair_stats", build)
+
+def _build_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The uncached build behind :func:`_pair_stats` (its cold plan)."""
+    warr = F.array(*[F.lit(w) for _, w in AA_WEIGHTS])
+    lists = _pair_lists(spark, sf_dir).withColumn(
+        "w_micro", F.element_at(warr, F.size("ss") - 1)
+    )
+    pairs = lists.select(
+        F.explode(F.expr(_PAIR_EXPLODE)).alias("k"), "w_micro"
+    )
+    return pairs.groupBy("k").agg(
+        F.count("*").alias("w"),
+        F.sum("w_micro").alias("aa_micro"),
+    )
 
 
 @query(

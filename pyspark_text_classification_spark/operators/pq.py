@@ -42,6 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from pyspark_text_classification_spark.plans.shared import shared_intermediate
 from pyspark_text_classification_spark.registry import query
 from pyspark_text_classification_spark.sources.parquet import fan_out, load_table
 from pyspark_text_classification_spark.operators.similarity import (
@@ -217,10 +218,6 @@ def trained_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
     one assign/mean round per Lloyd step).  Five serving/recall queries
     consume the identical codebook — the offline-trained artifact an ANN
     service loads, not a per-query computation."""
-    from pyspark_text_classification_spark.plans.shared import (
-        shared_intermediate,
-    )
-
     return shared_intermediate(
         spark,
         sf_dir,
@@ -517,9 +514,6 @@ def _exact_topk_ground_truth(
         _rank_topk,
         with_norms,
     )
-    from pyspark_text_classification_spark.plans.shared import (
-        shared_intermediate,
-    )
 
     def build() -> DataFrame:
         emb = load_table(spark, sf_dir, "embeddings")
@@ -759,10 +753,6 @@ def similarity_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     slot (bounded at |batch| x k rows) like the sibling gates — a
     dashboard scores the SERVED answers, it does not re-run the scan
     per refresh."""
-    from pyspark_text_classification_spark.plans.shared import (
-        shared_intermediate,
-    )
-
     ann = shared_intermediate(
         spark,
         sf_dir,
@@ -1197,10 +1187,6 @@ def similarity_ivf_pq_auto_recall(spark: SparkSession, sf_dir: str) -> DataFrame
     plans.shared session slot: the gate re-reads the index's answers
     instead of rebuilding the index when the serving query already ran
     this session."""
-    from pyspark_text_classification_spark.plans.shared import (
-        shared_intermediate,
-    )
-
     ann = shared_intermediate(
         spark,
         sf_dir,
@@ -1708,9 +1694,6 @@ def _exact_topk_superset(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark_text_classification_spark.operators.similarity import (
         _fold_sum,
         with_norms,
-    )
-    from pyspark_text_classification_spark.plans.shared import (
-        shared_intermediate,
     )
 
     kmax = max(KNN_SWEEP_KS)

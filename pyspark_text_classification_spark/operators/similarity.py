@@ -47,6 +47,7 @@ from pyspark_text_classification_spark.functions.text import (
     round_half_up,
     sql_round_half_up,
 )
+from pyspark_text_classification_spark.plans.shared import shared_intermediate
 from pyspark_text_classification_spark.registry import query
 from pyspark_text_classification_spark.sources.parquet import fan_out, load_table
 
@@ -1240,10 +1241,6 @@ def _lsh_exact_ground_truth(spark: SparkSession, sf_dir: str) -> DataFrame:
     against.  Session-cached (plans.shared): |sample| x {TOP_K} rows of
     two longs by construction; building it is the |sample| x n D-dim
     fold, the expensive side of any recall measurement."""
-    from pyspark_text_classification_spark.plans.shared import (
-        shared_intermediate,
-    )
-
     def build() -> DataFrame:
         e = with_norms(load_table(spark, sf_dir, "embeddings"))
         sampled = F.pmod(F.col("vec_id"), F.lit(RECALL_SAMPLE_MOD)) == 0
@@ -2291,10 +2288,6 @@ def shared_two_level_layout(
     byte-identical across the six *_auto serving-family queries, so the
     driver's sequential sweep and the bench build them once per
     (session, sf) instead of once per query."""
-    from pyspark_text_classification_spark.plans.shared import (
-        shared_intermediate,
-    )
-
     cents = shared_intermediate(
         spark,
         sf_dir,
@@ -3056,10 +3049,6 @@ def similarity_ann_ivf_auto_recall(spark: SparkSession, sf_dir: str) -> DataFram
     slot: in a sequential sweep or bench the gate re-reads the index's
     answers instead of rebuilding the index — exactly how a quality
     dashboard consumes a served snapshot."""
-    from pyspark_text_classification_spark.plans.shared import (
-        shared_intermediate,
-    )
-
     ann = (
         shared_intermediate(
             spark,
@@ -3430,10 +3419,6 @@ def served_members(
     (deletes) READ this artifact the way a production store reads its
     stored cell map; the serving queries keep building their own so the
     bench still prices the full build."""
-    from pyspark_text_classification_spark.plans.shared import (
-        shared_intermediate,
-    )
-
     return shared_intermediate(
         spark,
         sf_dir,
@@ -3682,10 +3667,6 @@ def similarity_ivf_delete_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     similarity_ann_ivf_auto_recall: a quality dashboard re-reads the
     served answers and the corpus-snapshot ground truth, it does not
     re-run the index per refresh."""
-    from pyspark_text_classification_spark.plans.shared import (
-        shared_intermediate,
-    )
-
     raw = load_table(spark, sf_dir, "embeddings")
     e = with_norms(raw).persist()
     tomb = raw.filter(

@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 
 from pyspark_text_classification_spark.functions.time import SQL_TS_US, ts_us
 from pyspark_text_classification_spark.operators.events import SESSION_GAP_US
+from pyspark_text_classification_spark.plans.shared import shared_intermediate
 from pyspark_text_classification_spark.registry import query
 from pyspark_text_classification_spark.sources.parquet import fan_out, load_table
 
@@ -105,10 +106,6 @@ def _hourly_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     waste the retrieval family's postings slot eliminated).  The
     streaming CUSUM twin deliberately does NOT use this slot: its
     series derives from drained stream state, not the batch scan."""
-    from pyspark_text_classification_spark.plans.shared import (
-        shared_intermediate,
-    )
-
     return shared_intermediate(
         spark,
         sf_dir,
@@ -491,10 +488,6 @@ def _daily_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     and consumed by two trend queries per session — exactly the
     build-once-serve-many shape plans/shared.py exists for, so the
     fact-scale events scan behind it runs once per (session, sf_dir)."""
-    from pyspark_text_classification_spark.plans.shared import (
-        shared_intermediate,
-    )
-
     def build() -> DataFrame:
         ev = fan_out(load_table(spark, sf_dir, "events")).select(
             "event_type", (ts_us() / DAY_US).cast("long").alias("d")

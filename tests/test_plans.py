@@ -545,19 +545,15 @@ def test_graph_family_plan_shapes(spark, sf_dir):
     global Sort+Limit over all pairs; the pair-stats COLD build is
     cartesian-free (its weight lookup is an in-row array literal, not a
     join); pagerank's scalar N broadcasts."""
-    from pyspark_text_classification_spark.operators.graph import _pair_stats
+    from pyspark_text_classification_spark.operators.graph import (
+        _build_pair_stats,
+    )
     from pyspark_text_classification_spark.plans.explain import (
         formatted_plan,
         uses_broadcast_join,
     )
-    from pyspark_text_classification_spark.plans.shared import (
-        clear_shared_intermediates,
-        raw_intermediate,
-    )
 
-    clear_shared_intermediates()  # measure the cold builder plans too
-    _pair_stats(spark, sf_dir)
-    cold = formatted_plan(raw_intermediate(spark, sf_dir, "graph_pair_stats"))
+    cold = formatted_plan(_build_pair_stats(spark, sf_dir))
     assert "CartesianProduct" not in cold
 
     for name in (
