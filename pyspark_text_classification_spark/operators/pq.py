@@ -788,67 +788,54 @@ def _ivf_pq_scored(spark: SparkSession, sf_dir: str, auto_cells: bool = False):
     FIXED_CELL_MAX_VECTORS on both engines — constant cells make in-cell
     pair work n^2/cells, measured 5.9x at the 10x fixture; below the cap,
     i.e. every bundled sf, results are unchanged); auto is uncapped."""
-    import math
-
     from pyspark_text_classification_spark.operators.similarity import (
         FIXED_CELL_MAX_VECTORS,
-        IVF_AUTO_MIN_CELLS,
         IVF_CELLS,
         IVFPQ_AUTO_NPROBE_MIN,
         IVFPQ_AUTO_NPROBE_MULT,
         auto_nprobe,
+        cell_candidates,
         ivf_assignment,
+        ivf_auto_index,
         query_batch_ids,
-        shared_two_level_layout,
-        two_level_members,
         with_norms,
     )
 
     # ---- coarse layer: cosine cells (auto: Lloyd-refined + two-level) ----
-    emb = load_table(spark, sf_dir, "embeddings")
-    if not auto_cells:
-        emb = emb.filter(F.col("vec_id") < FIXED_CELL_MAX_VECTORS)
-    n = with_norms(emb).persist()
     sampled = F.pmod(F.col("vec_id"), F.lit(PQ_QUERY_MOD)) == 0
     if auto_cells:
-        # One count sizes the cell count, the probe count, the Lloyd
-        # sample stride and the super-cell count; the composed system
-        # probes max(6, 3*isqrt(cells)) cells — measured against PQ loss
-        # stacking on IVF pruning (see similarity.py's
-        # IVFPQ_AUTO_NPROBE_* rationale).  The build assignment is the
-        # round-9 two-level map-side shape over Lloyd-refined centroids
-        # (similarity.two_level_members — ~n x 4·n^(1/4) distance work
-        # instead of the flat n x cells ~ n^1.5); the bounded query
-        # batch ranks ALL cells exactly (batch x cells is sublinear).
-        n_total = load_table(spark, sf_dir, "embeddings").count()
-        c = max(IVF_AUTO_MIN_CELLS, math.isqrt(n_total))
+        # The shared *_auto index value: one count sizes the cell
+        # count, the probe count, the Lloyd sample stride and the
+        # super-cell count, and the member table is the session's one
+        # two-level build (~n x 4·n^(1/4) distance work instead of the
+        # flat n x cells ~ n^1.5).  The composed system probes max(6,
+        # 3*isqrt(cells)) cells — measured against PQ loss stacking on
+        # IVF pruning (see similarity.py's IVFPQ_AUTO_NPROBE_*
+        # rationale); the bounded query batch ranks ALL cells exactly
+        # (batch x cells is sublinear).
+        index = ivf_auto_index(spark, sf_dir)
+        n = index.e
         nprobe = auto_nprobe(
-            c, IVFPQ_AUTO_NPROBE_MULT, IVFPQ_AUTO_NPROBE_MIN
+            index.cells, IVFPQ_AUTO_NPROBE_MULT, IVFPQ_AUTO_NPROBE_MIN
         )
-        cents, idx = shared_two_level_layout(spark, sf_dir, n, n_total, c)
-        # persisted n x 16B frame: the fold pipeline materializes once
-        # with exact stats instead of living under the candidate join
-        members = (
-            two_level_members(n, idx)
-            .select(F.col("vec_id").alias("neighbor_id"), "cent_id")
-            .persist()
-        )
+        members = index.members
         # Bound the auto path's query batch ABSOLUTELY: the 1/PQ_QUERY_MOD
         # sample still scales with the corpus, so without a cap total
         # probe work re-grows ~n^(7/4) once nprobe correctly scales
         # (round-7 audit: 8.5x at 10x).  The batch is the QUERY_BATCH_MAX
         # lowest ids of the sample (mirrored in the oracle); below the
         # cap — every bundled sf — it IS the full sample.
-        qb = F.broadcast(
-            query_batch_ids(
-                load_table(spark, sf_dir, "embeddings").filter(sampled)
-            )
-        )
-        probes = ivf_assignment(n.join(qb, "vec_id"), cents, nprobe).select(
-            F.col("vec_id").alias("q_id"), "cent_id"
-        )
-        persisted = [members, n]
+        qb = F.broadcast(query_batch_ids(index.raw.filter(sampled)))
+        probes = ivf_assignment(
+            n.join(qb, "vec_id"), index.cents, nprobe
+        ).select("vec_id", "cent_id")
+        persisted = [n]
     else:
+        n = with_norms(
+            load_table(spark, sf_dir, "embeddings").filter(
+                F.col("vec_id") < FIXED_CELL_MAX_VECTORS
+            )
+        ).persist()
         nprobe = IVFPQ_NPROBE
         cents = (
             n.orderBy("vec_id")
@@ -860,25 +847,14 @@ def _ivf_pq_scored(spark: SparkSession, sf_dir: str, auto_cells: bool = False):
             )
         )
         ranked = ivf_assignment(n, cents, nprobe).persist()
-        members = ranked.filter(F.col("rk") == 1).select(
-            F.col("vec_id").alias("neighbor_id"), "cent_id"
-        )
-        probes = ranked.filter(sampled).select(
-            F.col("vec_id").alias("q_id"), "cent_id"
-        )
+        members = ranked.filter(F.col("rk") == 1).select("vec_id", "cent_id")
+        probes = ranked.filter(sampled).select("vec_id", "cent_id")
         persisted = [ranked, n]
-    cand = (
-        # NOTE(r11 opt): no .distinct() — members is rank-1 (one cell per
-        # neighbor) and probes carries distinct cells per query, so the
-        # cell equi-join emits each (query, neighbor) pair AT MOST ONCE;
-        # the oracle's DISTINCT is equally a no-op on unique input, so
-        # removing the dedup exchange cannot change the result set
-        # probes is bounded on both paths (auto: QUERY_BATCH_MAX batch;
-        # fixed: 1/PQ_QUERY_MOD sample of the capped corpus): broadcast it
-        # so the member table never shuffles for the probe (guide §3.1)
-        F.broadcast(probes).join(members, "cent_id")
-        .filter(F.col("q_id") != F.col("neighbor_id"))
-        .select("q_id", "neighbor_id")
+    # probes is bounded on both paths (auto: QUERY_BATCH_MAX batch;
+    # fixed: 1/PQ_QUERY_MOD sample of the capped corpus): broadcast it
+    # so the member table never shuffles for the probe (guide §3.1)
+    cand = cell_candidates(F.broadcast(probes), members).withColumnRenamed(
+        "vec_id", "q_id"
     )
 
     # ---- fine layer: PQ codes + per-query LUT (trained codebook) ----

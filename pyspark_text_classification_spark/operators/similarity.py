@@ -39,6 +39,9 @@ whole index is oracle-checkable.
 
 from __future__ import annotations
 
+import math
+from dataclasses import dataclass
+
 from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -909,20 +912,8 @@ def similarity_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     ranked = ivf_assignment(e, cents, IVF_NPROBE).persist()
-    members = ranked.filter(F.col("rk") == 1).select(
-        F.col("vec_id").alias("neighbor_id"), "cent_id"
-    )
-    probes = ranked.select("vec_id", "cent_id")
-    cand = (
-        # NOTE(r11 opt): no .distinct() — members is rank-1 (one cell per
-        # neighbor) and probes carries distinct cells per query, so the
-        # cell equi-join emits each (query, neighbor) pair AT MOST ONCE;
-        # the oracle's DISTINCT is equally a no-op on unique input, so
-        # removing the dedup exchange cannot change the result set
-        probes.join(members, "cent_id")
-        .filter(F.col("vec_id") != F.col("neighbor_id"))
-        .select("vec_id", "neighbor_id")
-    )
+    members = ranked.filter(F.col("rk") == 1).select("vec_id", "cent_id")
+    cand = cell_candidates(ranked.select("vec_id", "cent_id"), members)
     pairs = candidate_cosines(e, cand)
     topk = with_n_indexed(
         _rank_topk(pairs),
@@ -1865,8 +1856,6 @@ def auto_nprobe(
     sql_auto_nprobe; both consume the cell count produced by the shared
     sizing rule (auto_cells / the cc CTE) so the probe count cannot fork
     between engines."""
-    import math
-
     return max(floor_, mult * math.isqrt(cells))
 
 
@@ -1939,6 +1928,31 @@ def ivf_assignment(e: DataFrame, cents: DataFrame, nprobe: int) -> DataFrame:
     ).filter(F.col("rk") <= nprobe)
 
 
+def cell_candidates(
+    probes: DataFrame, members: DataFrame, *keys: str
+) -> DataFrame:
+    """(vec_id, neighbor_id): the IVF candidate pairs — probes
+    (vec_id, cent_id) equi-joined with members (vec_id, cent_id) on the
+    cell plus any extra ``keys`` both sides carry (filtered_ann's
+    label), self-pairs dropped; the member's vec_id comes out as
+    neighbor_id.  Callers whose probes are bounded pass
+    ``F.broadcast(probes)`` so the member table never shuffles.
+
+    No .distinct(): members is rank-1 (one cell per neighbor) and
+    probes carries distinct cells per query, so the cell equi-join
+    emits each (query, neighbor) pair AT MOST ONCE; the oracle's
+    DISTINCT is equally a no-op on unique input, so dropping the dedup
+    exchange cannot change the result set."""
+    return (
+        probes.join(
+            members.withColumnRenamed("vec_id", "neighbor_id"),
+            ["cent_id", *keys],
+        )
+        .filter(F.col("vec_id") != F.col("neighbor_id"))
+        .select("vec_id", "neighbor_id")
+    )
+
+
 # strict-'>' argmax-cosine fold over a cent_id-sorted (cent_id, cv, cnrm)
 # struct array ``cs`` next to (v, nrm) — the shared in-row assignment of
 # argmax_cell and two_level_members, as one parsed expression (r12)
@@ -2000,8 +2014,6 @@ def auto_cells(count_src: DataFrame) -> int:
     count() action — the Python twin of the cc CTE.  Callers that also
     need the probe count derive it from THIS value via auto_nprobe so
     one count serves both sizing decisions."""
-    import math
-
     return max(IVF_AUTO_MIN_CELLS, math.isqrt(count_src.count()))
 
 
@@ -2011,10 +2023,10 @@ def auto_centroids(
     cells: int | None = None,
 ) -> DataFrame:
     """(cent_id, cv, cnrm): the corpus-sized SEED centroid set — the
-    Spark twin of sql_auto_cells_cte.  kmeans_auto, dedup_semantic_auto,
-    nprobe_sweep and the ivf_append trilogy consume it directly; the
-    round-9 *_auto SERVING family seeds from it inside
-    refined_centroids and serves the Lloyd-refined result.
+    Spark twin of sql_auto_cells_cte.  kmeans_auto and the ivf_append
+    trilogy consume it directly; ivf_auto_index (the round-9 *_auto
+    family) seeds from it inside refined_centroids and serves the
+    Lloyd-refined result.
 
     c = max({IVF_AUTO_MIN_CELLS}, floor(sqrt(count))) comes from ONE
     bounded count() action (math.isqrt == the engines' correctly-rounded
@@ -2081,8 +2093,6 @@ BUILD_SUPER_PROBES = 3
 def auto_supers(cells: int) -> int:
     """max({IVF_SUPER_MIN}, isqrt(cells)) — the super-cell count; the
     cells sizing rule applied one level up."""
-    import math
-
     return max(IVF_SUPER_MIN, math.isqrt(cells))
 
 
@@ -2279,15 +2289,43 @@ def two_level_members(e: DataFrame, idx: DataFrame) -> DataFrame:
     )
 
 
-def shared_two_level_layout(
-    spark: SparkSession, sf_dir: str, e: DataFrame, n_total: int, cells: int
-) -> tuple[DataFrame, DataFrame]:
-    """(cents, idx): the Lloyd-refined centroid table and its two-level
-    index, SESSION-CACHED via plans.shared — both are bounded (cells
-    rows of payload, the codebook discipline), deterministic, and
-    byte-identical across the six *_auto serving-family queries, so the
-    driver's sequential sweep and the bench build them once per
-    (session, sf) instead of once per query."""
+@dataclass(frozen=True)
+class IvfIndex:
+    """The sqrt-sized two-level IVF index the *_auto family serves from.
+
+    - ``raw``: the embeddings scan;
+    - ``e``: (vec_id, v, nrm), PERSISTED — the caller releases it
+      through ``_finalize``;
+    - ``cells``: max({IVF_AUTO_MIN_CELLS}, isqrt(n)) from one count;
+    - ``cents``: the Lloyd-refined centroids (cent_id, cv, cnrm);
+    - ``idx``: two_level_index's one-row (ss, cmap) frame;
+    - ``members``: (vec_id, cent_id), each vector's two-level cell.
+
+    ``cents``, ``idx`` and ``members`` are plans.shared slots, so the
+    serving and maintenance queries of one session read one copy."""
+
+    raw: DataFrame
+    e: DataFrame
+    cells: int
+    cents: DataFrame
+    idx: DataFrame
+    members: DataFrame
+
+
+def ivf_auto_index(spark: SparkSession, sf_dir: str) -> IvfIndex:
+    """Load -> norms -> ONE count -> cells -> refined centroids ->
+    two-level index -> member table, the build every *_auto query
+    shares.  The three index artifacts are deterministic session slots:
+    the first query of a session (or of a perfbench pass, which clears
+    the slots) pays the full build, later ones read it — build the
+    partition-local index once, serve top-k from it (REPOSE).  The
+    member table is corpus-rank (two longs per row, the relational form
+    of FAISS's inverted lists): plans.shared's one admitted persisted-
+    index exception."""
+    raw = load_table(spark, sf_dir, "embeddings")
+    e = with_norms(raw).persist()
+    n_total = raw.count()
+    cells = max(IVF_AUTO_MIN_CELLS, math.isqrt(n_total))
     cents = shared_intermediate(
         spark,
         sf_dir,
@@ -2300,7 +2338,13 @@ def shared_two_level_layout(
         "ivf_auto_two_level_index",
         lambda: two_level_index(cents, cells),
     )
-    return cents, idx
+    members = shared_intermediate(
+        spark,
+        sf_dir,
+        "ivf_auto_members",
+        lambda: two_level_members(e, idx).select("vec_id", "cent_id"),
+    )
+    return IvfIndex(raw, e, cells, cents, idx, members)
 
 
 def sql_two_level_cells_cte(src: str) -> str:
@@ -2475,49 +2519,26 @@ def similarity_ann_ivf_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     supers, nprobe, batch) derives from ONE count(*) shared with the
     DuckDB twin, so the oracle cannot fork.  Candidates are cell-local
     equi-joins; final cosines are exact on the true vectors."""
-    import math
-
-    raw = load_table(spark, sf_dir, "embeddings")
-    e = with_norms(raw).persist()
-    n_total = raw.count()
-    cells = max(IVF_AUTO_MIN_CELLS, math.isqrt(n_total))
-    cents, idx = shared_two_level_layout(spark, sf_dir, e, n_total, cells)
-    # members/probes are persisted two-long-column frames (n x 16B): the
-    # fold/window pipelines materialize ONCE with exact stats instead of
-    # living under the candidate join — the same discipline as the
-    # round-8 persisted rank stream they replace
-    members = (
-        two_level_members(e, idx)
-        .select(F.col("vec_id").alias("neighbor_id"), "cent_id")
-        .persist()
-    )
-    qb = query_batch_ids(raw)
-    eb = e.join(F.broadcast(qb), "vec_id")
+    index = ivf_auto_index(spark, sf_dir)
+    qb = query_batch_ids(index.raw)
+    eb = index.e.join(F.broadcast(qb), "vec_id")
+    # probes is a persisted two-long-column frame: the window pipeline
+    # materializes ONCE with exact stats instead of living under the
+    # candidate join
     probes = (
-        ivf_assignment(eb, cents, auto_nprobe(cells))
+        ivf_assignment(eb, index.cents, auto_nprobe(index.cells))
         .select("vec_id", "cent_id")
         .persist()
     )
-    cand = (
-        # NOTE(r11 opt): no .distinct() — members is rank-1 (one cell per
-        # neighbor) and probes carries distinct cells per query, so the
-        # cell equi-join emits each (query, neighbor) pair AT MOST ONCE;
-        # the oracle's DISTINCT is equally a no-op on unique input, so
-        # removing the dedup exchange cannot change the result set
-        # broadcast the PROBES side (guide §3.1): it is batch-capped
-        # (<= QUERY_BATCH_MAX x nprobe rows of two longs) while members is
-        # corpus-scale — the broadcast makes the candidate join map-side
-        # over members, so the member table never shuffles to be probed
-        F.broadcast(probes).join(members, "cent_id")
-        .filter(F.col("vec_id") != F.col("neighbor_id"))
-        .select("vec_id", "neighbor_id")
-    )
+    # broadcast the PROBES side (guide §3.1): it is batch-capped
+    # (<= QUERY_BATCH_MAX x nprobe rows of two longs) while members is
+    # corpus-scale — the candidate join runs map-side over members
+    cand = cell_candidates(F.broadcast(probes), index.members)
     # cand.vec_id ⊆ qb by construction (probes derive from eb = e ⋈ qb):
     # broadcast the batch's query vectors so the exact-cosine stage
     # shuffles the corpus once (y side), not twice (guide §3.1, r12)
-    pairs = candidate_cosines(e, cand, query_ids=qb)
-    topk = _rank_topk(pairs)
-    return _finalize(topk, e, members, probes)
+    pairs = candidate_cosines(index.e, cand, query_ids=qb)
+    return _finalize(_rank_topk(pairs), index.e, probes)
 
 
 # --- Lloyd step with corpus-sized k (the sizing rule applied to clustering) --
@@ -2658,14 +2679,10 @@ def similarity_ivf_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_existing side is read from the stored cell table rather than
     recomputed — this registered twin re-derives it with the same
     argmax so the DuckDB oracle can check the full balance exactly."""
-    import math
-
     e = with_norms(load_table(spark, sf_dir, "embeddings")).persist()
     half = load_table(spark, sf_dir, "embeddings").count() // 2
     ex = e.filter(F.col("vec_id") < half)
-    cells = max(IVF_AUTO_MIN_CELLS, math.isqrt(ex.count()))
-    cents = auto_centroids(ex, cells=cells)
-    assigned = argmax_cell(e, cents)
+    assigned = argmax_cell(e, auto_centroids(ex))  # sized by auto_cells(ex)
     out = assigned.groupBy("cent_id").agg(
         F.sum(F.when(F.col("vec_id") < half, 1).otherwise(0))
         .cast("long")
@@ -2742,54 +2759,29 @@ def similarity_filtered_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells hold fewer than {TOP_K} same-label vectors return fewer rows
     — visible, deterministic, and exactly what a deployment sees when a
     filter is too selective for its nprobe."""
-    import math
-
-    raw = load_table(spark, sf_dir, "embeddings")
-    labels = raw.select("vec_id", "label")
-    e = with_norms(raw).persist()
-    n_total = raw.count()
-    cells = max(IVF_AUTO_MIN_CELLS, math.isqrt(n_total))
-    cents, idx = shared_two_level_layout(spark, sf_dir, e, n_total, cells)
-    members = (
-        two_level_members(e, idx)
-        .join(labels, "vec_id")
-        .select(
-            F.col("vec_id").alias("neighbor_id"),
-            "cent_id",
-            F.col("label").alias("n_label"),
-        )
-        .persist()
-    )
+    index = ivf_auto_index(spark, sf_dir)
+    labels = index.raw.select("vec_id", "label")
     sampled = F.pmod(F.col("vec_id"), F.lit(RECALL_SAMPLE_MOD)) == 0
     # batch over the SAMPLE (the pq auto path's convention), so the
     # served batch is QUERY_BATCH_MAX sampled queries — not the
     # 1/RECALL_SAMPLE_MOD survivors of a full-corpus batch
-    qb = query_batch_ids(raw.filter(sampled))
-    eb = e.join(F.broadcast(qb), "vec_id")
+    qb = query_batch_ids(index.raw.filter(sampled))
+    eb = index.e.join(F.broadcast(qb), "vec_id")
     probes = (
-        ivf_assignment(eb, cents, auto_nprobe(cells))
+        ivf_assignment(eb, index.cents, auto_nprobe(index.cells))
         .join(labels, "vec_id")
         .select("vec_id", "cent_id", "label")
     )
-    cand = (
-        # NOTE(r11 opt): no .distinct() — members is rank-1 (one cell per
-        # neighbor) and probes carries distinct cells per query, so the
-        # cell equi-join emits each (query, neighbor) pair AT MOST ONCE;
-        # the oracle's DISTINCT is equally a no-op on unique input, so
-        # removing the dedup exchange cannot change the result set
-        # probes is batch-capped (sampled batch x nprobe): broadcast it so
-        # the label-carrying member table never shuffles (guide §3.1)
-        F.broadcast(probes).join(members, "cent_id")
-        .filter(
-            (F.col("vec_id") != F.col("neighbor_id"))
-            & (F.col("label") == F.col("n_label"))
-        )
-        .select("vec_id", "neighbor_id")
+    # probes is batch-capped (sampled batch x nprobe): broadcast it so
+    # the label-carrying member table never shuffles (guide §3.1); the
+    # label is a second equi-join key, the oracle's p.label = m.label
+    cand = cell_candidates(
+        F.broadcast(probes), index.members.join(labels, "vec_id"), "label"
     )
     # cand.vec_id ⊆ qb (probes derive from eb = e ⋈ qb): broadcast the
     # batch's query vectors — one corpus shuffle, not two (r12)
-    topk = _rank_topk(candidate_cosines(e, cand, query_ids=qb))
-    return _finalize(topk, e, members)
+    topk = _rank_topk(candidate_cosines(index.e, cand, query_ids=qb))
+    return _finalize(topk, index.e)
 
 
 # --- Staleness gate for the appended index ----------------------------------
@@ -2903,31 +2895,18 @@ def similarity_ivf_append_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth, tie-breaks, and auto-nprobe rule (computed from the STALE
     cell count, as a deployment serving that layout would) as every
     other recall gate."""
-    import math
-
     raw = load_table(spark, sf_dir, "embeddings")
     e = with_norms(raw).persist()
     half = raw.count() // 2
     exh = e.filter(F.col("vec_id") < half)
-    cells = max(IVF_AUTO_MIN_CELLS, math.isqrt(exh.count()))
+    cells = auto_cells(exh)
     cents = auto_centroids(exh, cells=cells)
     ranked = ivf_assignment(e, cents, auto_nprobe(cells)).persist()
-    members = ranked.filter(F.col("rk") == 1).select(
-        F.col("vec_id").alias("neighbor_id"), "cent_id"
-    )
+    members = ranked.filter(F.col("rk") == 1).select("vec_id", "cent_id")
     probes = ranked.filter(
         F.pmod(F.col("vec_id"), F.lit(RECALL_SAMPLE_MOD)) == 0
     ).select("vec_id", "cent_id")
-    cand = (
-        # NOTE(r11 opt): no .distinct() — members is rank-1 (one cell per
-        # neighbor) and probes carries distinct cells per query, so the
-        # cell equi-join emits each (query, neighbor) pair AT MOST ONCE;
-        # the oracle's DISTINCT is equally a no-op on unique input, so
-        # removing the dedup exchange cannot change the result set
-        probes.join(members, "cent_id")
-        .filter(F.col("vec_id") != F.col("neighbor_id"))
-        .select("vec_id", "neighbor_id")
-    )
+    cand = cell_candidates(probes, members)
     ann = _rank_topk(candidate_cosines(e, cand)).select(
         "vec_id", "neighbor_id"
     )
@@ -3127,12 +3106,13 @@ def dedup_semantic_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounds expected in-cell pair work at ~n^1.5 total.
 
     Round 9 (second pass): assignment now rides the SERVING family's
-    two-level Lloyd-refined layout (shared_two_level_layout /
-    two_level_members — the sample-bounded Lloyd round plus top-3-super
-    routing, all in-row map-side folds), killing the flat n x cells ~
-    n^1.5 assignment term this query still carried (audited 4.2x at
-    10x on the seed layout) and sharing the session-cached index
-    artifacts with ANN/IVF-PQ/filtered search — SemDeDup on the SAME
+    two-level Lloyd-refined layout (ivf_auto_index's two-level index,
+    re-applied by two_level_members because the pair fold needs v and
+    nrm on each member row — the sample-bounded Lloyd round plus
+    top-3-super routing, all in-row map-side folds), killing the flat
+    n x cells ~ n^1.5 assignment term this query still carried
+    (audited 4.2x at 10x on the seed layout) and sharing the
+    session-cached index artifacts with ANN/IVF-PQ/filtered search — SemDeDup on the SAME
     partition the store serves, which is exactly how the paper deploys
     it.  Every sizing rule still derives from ONE count(*) mirrored in
     the oracle chain (sql_two_level_cells_cte), so the twin stays
@@ -3140,14 +3120,8 @@ def dedup_semantic_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs (cos >= {NEAR_DUP_THRESHOLD}) are found ONLY via the
     cell-local equi-join, greedy lowest-vec_id keep, per-cell keep/drop
     audit counts out."""
-    import math
-
-    raw = load_table(spark, sf_dir, "embeddings")
-    e = with_norms(raw)
-    n_total = raw.count()
-    cells = max(IVF_AUTO_MIN_CELLS, math.isqrt(n_total))
-    cents, idx = shared_two_level_layout(spark, sf_dir, e, n_total, cells)
-    m = two_level_members(e, idx).persist()
+    index = ivf_auto_index(spark, sf_dir)
+    m = two_level_members(index.e, index.idx).persist()
     a = m.alias("a")
     b = m.alias("b")
     dot_ab = _fold_sum(
@@ -3185,7 +3159,7 @@ def dedup_semantic_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("n_kept"),
         )
     )
-    return _finalize(out, m)
+    return _finalize(out, m, index.e)
 
 
 # --- nprobe sweep: the table that justifies the auto probe rule ---------------
@@ -3300,20 +3274,11 @@ def similarity_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     for its probe superset (WindowGroupLimit-Partial shape).  The
     level table is a 5-row broadcast; the exact ground truth is the
     session-cached sample top-{TOP_K} every recall gate shares."""
-    import math
-
-    raw = load_table(spark, sf_dir, "embeddings")
-    e = with_norms(raw).persist()
-    n_total = raw.count()
-    cells = max(IVF_AUTO_MIN_CELLS, math.isqrt(n_total))
-    cents, idx = shared_two_level_layout(spark, sf_dir, e, n_total, cells)
-    members = (
-        two_level_members(e, idx)
-        .select(F.col("vec_id").alias("neighbor_id"), "cent_id")
-        .persist()
-    )
+    index = ivf_auto_index(spark, sf_dir)
+    e = index.e
+    members = index.members.withColumnRenamed("vec_id", "neighbor_id")
     es = e.filter(F.pmod(F.col("vec_id"), F.lit(RECALL_SAMPLE_MOD)) == 0)
-    ranked = ivf_assignment(es, cents, _SWEEP_MAX).persist()
+    ranked = ivf_assignment(es, index.cents, _SWEEP_MAX).persist()
     probes = ranked.select("vec_id", "cent_id", "rk")
     cand = (
         probes.join(members, "cent_id")
@@ -3392,7 +3357,7 @@ def similarity_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_candidates").cast("long").alias("n_candidates"),
         "macro_recall",
     )
-    return _finalize(out, e, ranked, members)
+    return _finalize(out, e, ranked)
 
 
 # --- Index maintenance: deletions (tombstones) -------------------------------
@@ -3407,24 +3372,6 @@ def similarity_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 DELETE_MOD = 10
 DELETE_REM = 4
 COMPACT_PCT = 30  # compaction trigger: tombstones exceed 30% of a cell
-
-
-def served_members(
-    spark: SparkSession, sf_dir: str, e: DataFrame, idx: DataFrame
-) -> DataFrame:
-    """(vec_id, cent_id): the SERVED two-level member table, session-
-    cached as a persisted-index-artifact slot (plans.shared's one
-    admitted fact-rank exception — two longs per corpus row, the
-    relational form of FAISS's inverted lists).  Maintenance operations
-    (deletes) READ this artifact the way a production store reads its
-    stored cell map; the serving queries keep building their own so the
-    bench still prices the full build."""
-    return shared_intermediate(
-        spark,
-        sf_dir,
-        "ivf_auto_members_served",
-        lambda: two_level_members(e, idx).select("vec_id", "cent_id"),
-    )
 
 
 @query(
@@ -3460,26 +3407,19 @@ def similarity_ivf_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     it the rewrite is cheaper than the wasted scan work, which is how
     FAISS/Milvus deployments schedule compaction.
 
-    Scale shape: the member table is READ from the served snapshot
-    (served_members — the stored artifact a production store keeps;
-    the build itself is priced by the serving queries), the tombstone
+    Scale shape: the member table is READ from the index value
+    (ivf_auto_index's members slot — the stored artifact a production
+    store keeps, the same one the serving queries probe), the tombstone
     set stays an ID FRAME joined by key, not a filter predicate —
     production deletes arrive as id lists, so the plan must be the
     anti-join/flag-join plan, ~n x 16B rows through one equi-join and a
     cells-row aggregate.  No vectors move: deletion touches only the
     (vec_id, cent_id) payload."""
-    import math
-
-    raw = load_table(spark, sf_dir, "embeddings")
-    e = with_norms(raw).persist()
-    n_total = raw.count()
-    cells = max(IVF_AUTO_MIN_CELLS, math.isqrt(n_total))
-    cents, idx = shared_two_level_layout(spark, sf_dir, e, n_total, cells)
-    members = served_members(spark, sf_dir, e, idx)
-    tomb = raw.filter(
+    index = ivf_auto_index(spark, sf_dir)
+    tomb = index.raw.filter(
         F.pmod(F.col("vec_id"), F.lit(DELETE_MOD)) == DELETE_REM
     ).select("vec_id", F.lit(1).alias("is_del"))
-    flagged = members.join(tomb, "vec_id", "left")
+    flagged = index.members.join(tomb, "vec_id", "left")
     out = flagged.groupBy(F.col("cent_id").alias("cell_id")).agg(
         F.count("*").alias("n_members"),
         F.sum(F.when(F.col("is_del").isNotNull(), 1).otherwise(0))
@@ -3494,7 +3434,7 @@ def similarity_ivf_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("int")
         .alias("needs_compaction"),
     )
-    return _finalize(out, e)
+    return _finalize(out, index.e)
 
 
 def _delete_served_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3504,41 +3444,27 @@ def _delete_served_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     table ANTI-JOINED with the tombstone set, exact cosine rescore.
     Split out of the recall gate so tests can pin the delete-then-query
     correctness trap directly: no tombstoned id may ever be emitted."""
-    import math
-
-    raw = load_table(spark, sf_dir, "embeddings")
-    e = with_norms(raw).persist()
-    n_total = raw.count()
-    cells = max(IVF_AUTO_MIN_CELLS, math.isqrt(n_total))
-    cents, idx = shared_two_level_layout(spark, sf_dir, e, n_total, cells)
-    members = served_members(spark, sf_dir, e, idx)
-    tomb = raw.filter(
+    index = ivf_auto_index(spark, sf_dir)
+    e = index.e
+    tomb = index.raw.filter(
         F.pmod(F.col("vec_id"), F.lit(DELETE_MOD)) == DELETE_REM
     ).select("vec_id")
-    # the trap the oracle pins: every candidate flows through this
-    # anti-join, so a deleted id can never be emitted as a neighbor
-    surv_members = members.join(tomb, "vec_id", "left_anti").select(
-        F.col("vec_id").alias("neighbor_id"), "cent_id"
-    )
     samp = (
         e.filter(F.pmod(F.col("vec_id"), F.lit(RECALL_SAMPLE_MOD)) == 0)
         .join(tomb, "vec_id", "left_anti")  # deleted queries don't query
     )
     qb_ids = query_batch_ids(samp)
     probes = ivf_assignment(
-        e.join(F.broadcast(qb_ids), "vec_id"), cents, auto_nprobe(cells)
+        e.join(F.broadcast(qb_ids), "vec_id"),
+        index.cents,
+        auto_nprobe(index.cells),
     ).select("vec_id", "cent_id")
-    cand = (
-        # NOTE(r11 opt): no .distinct() — members is rank-1 (one cell per
-        # neighbor) and probes carries distinct cells per query, so the
-        # cell equi-join emits each (query, neighbor) pair AT MOST ONCE;
-        # the oracle's DISTINCT is equally a no-op on unique input, so
-        # removing the dedup exchange cannot change the result set
-        # probes is batch-capped: broadcast it so the served member table
-        # (the persisted index artifact) never shuffles (guide §3.1)
-        F.broadcast(probes).join(surv_members, "cent_id")
-        .filter(F.col("vec_id") != F.col("neighbor_id"))
-        .select("vec_id", "neighbor_id")
+    # the trap the oracle pins: every candidate flows through the
+    # members-vs-tombstones anti-join, so a deleted id can never be
+    # emitted as a neighbor; probes is batch-capped, so it broadcasts
+    # and the member table never shuffles (guide §3.1)
+    cand = cell_candidates(
+        F.broadcast(probes), index.members.join(tomb, "vec_id", "left_anti")
     )
     # cand.vec_id ⊆ qb_ids (probes derive from e ⋈ qb_ids): broadcast the
     # batch's query vectors — one corpus shuffle, not two (r12)

@@ -34,14 +34,14 @@ Discipline (this is a cache, so the rules are strict):
   stay inside their query and are released by ``_finalize``.
 - ONE admitted exception to "provably small": a PERSISTED INDEX
   ARTIFACT — a frame a production deployment writes to storage at
-  index-build time and that maintenance operations then READ rather
-  than rebuild.  Currently the only occupant is the served IVF member
-  table (``ivf_auto_members_served``: two longs per corpus row, the
-  relational form of FAISS's inverted lists / a Milvus segment's id
-  map), consumed by the index-maintenance queries (deletes) whose
-  whole premise is operating on the STORED layout.  The serving
-  queries themselves deliberately do NOT use this slot — they keep
-  pricing the full build in the bench.
+  index-build time and then serves and maintains rather than
+  rebuilds.  The only occupant is the member slot of the IVF index
+  value (``ivf_auto_members``, built by
+  ``operators.similarity.ivf_auto_index``: two longs per corpus row,
+  the relational form of FAISS's inverted lists / a Milvus segment's
+  id map), read by the serving queries and the maintenance queries
+  (deletes) alike.  ``perfbench`` clears every slot before each pass,
+  so the first IVF query of a pass still pays the full build.
 - Results are value-identical to the uncached build by construction
   (the builders are deterministic), so correctness runs that execute
   queries in any order, or one at a time, see identical rows.

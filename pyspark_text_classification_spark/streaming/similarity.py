@@ -146,10 +146,7 @@ def stream_ivf_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows of state however long the stream runs — the bounded-state
     contract that makes continuous ingest viable.  Drained with
     availableNow and held to the batch oracle's append side."""
-    import math
-
     from pyspark_text_classification_spark.operators.similarity import (
-        IVF_AUTO_MIN_CELLS,
         _fold_sum,
         argmax_cell,
         auto_centroids,
@@ -158,8 +155,7 @@ def stream_ivf_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     half = emb.count() // 2
     ex = with_norms(emb).filter(F.col("vec_id") < half).persist()
-    cells = max(IVF_AUTO_MIN_CELLS, math.isqrt(ex.count()))
-    cents = auto_centroids(ex, cells=cells)
+    cents = auto_centroids(ex)  # sized by auto_cells(ex)
 
     # the norm uses the shared sequential fold (_fold_sum) so the
     # cross-engine IEEE summation order stays defined in ONE place
@@ -255,8 +251,8 @@ def stream_ivf_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Execution shape: the stream carries only vec_ids (a delete request
     is an id, not a vector); each micro-batch equi-joins the STATIC
-    served member table (served_members — the persisted index artifact
-    the batch delete reads) to resolve its cell, then a broadcast join
+    member table (ivf_auto_index's members slot — the persisted index
+    artifact the batch delete reads) to resolve its cell, then a broadcast join
     attaches the cells-row per-cell totals BEFORE aggregation (stream-
     static joins must precede the streaming aggregate), and the only
     stateful piece is the COMPLETE-mode (cell, count) aggregate —
@@ -269,24 +265,15 @@ def stream_ivf_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     (vec_id % DELETE_MOD == DELETE_REM) over the corpus stream, so the
     drained table is held to the same per-cell arithmetic — one leaked
     or dropped tombstone is a hash mismatch."""
-    import math
-
     from pyspark_text_classification_spark.operators.similarity import (
         COMPACT_PCT,
         DELETE_MOD,
         DELETE_REM,
-        IVF_AUTO_MIN_CELLS,
-        served_members,
-        shared_two_level_layout,
-        with_norms as _wn,
+        ivf_auto_index,
     )
 
-    raw = load_table(spark, sf_dir, "embeddings")
-    e = _wn(raw).persist()
-    n_total = raw.count()
-    cells = max(IVF_AUTO_MIN_CELLS, math.isqrt(n_total))
-    _cents, idx = shared_two_level_layout(spark, sf_dir, e, n_total, cells)
-    members = served_members(spark, sf_dir, e, idx)
+    index = ivf_auto_index(spark, sf_dir)
+    members = index.members
     percell = (
         members.groupBy("cent_id")
         .agg(F.count("*").alias("n_members"))
@@ -326,7 +313,7 @@ def stream_ivf_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         q.awaitTermination()
     out = spark.table(sink_name).localCheckpoint(eager=True)
-    e.unpersist()
+    index.e.unpersist()
     return out
 
 

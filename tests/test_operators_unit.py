@@ -1054,6 +1054,64 @@ def test_ivf_delete_balance_and_tombstone_exclusion(spark, sf_dir):
     assert excluded, "tombstones never intersect the query sample"
 
 
+def test_ivf_auto_index_serves_one_member_table(spark, sf_dir, monkeypatch):
+    """ivf_auto_index is the *_auto family's one index value: after a
+    clear, ann_ivf_auto, ivf_pq_auto and ivf_delete build the two-level
+    member table ONCE between them, the session holds exactly three
+    ivf_auto_* slots (centroids, two-level index, members), the member
+    slot equals a cold build, and every query's rows equal its run
+    after a fresh clear."""
+    from pyspark_text_classification_spark.all_queries import QUERIES
+    from pyspark_text_classification_spark.operators import similarity
+    from pyspark_text_classification_spark.plans.shared import (
+        clear_shared_intermediates,
+    )
+
+    names = (
+        "similarity_ann_ivf_auto",
+        "similarity_ivf_pq_auto",
+        "similarity_ivf_delete",
+    )
+
+    def run(name):
+        return sorted(QUERIES[name](spark, sf_dir).collect())
+
+    alone = {}
+    for name in names:
+        clear_shared_intermediates()
+        alone[name] = run(name)
+
+    builds = {"n": 0}
+    real_members = similarity.two_level_members
+
+    def counted(e, idx):
+        builds["n"] += 1
+        return real_members(e, idx)
+
+    monkeypatch.setattr(similarity, "two_level_members", counted)
+    clear_shared_intermediates()
+    in_sequence = {name: run(name) for name in names}
+    assert builds["n"] == 1
+    slots = {
+        t.name
+        for t in spark.catalog.listTables()
+        if t.isTemporary and t.name.startswith("shared_slot_ivf_auto_")
+    }
+    assert len(slots) == 3, slots
+    assert in_sequence == alone
+
+    index = similarity.ivf_auto_index(spark, sf_dir)
+    n_total = index.raw.count()
+    cents = similarity.refined_centroids(index.e, n_total, index.cells)
+    cold = real_members(
+        index.e, similarity.two_level_index(cents, index.cells)
+    ).select("vec_id", "cent_id")
+    assert sorted(index.members.collect()) == sorted(cold.collect())
+    assert builds["n"] == 1  # the index value read its slots
+    index.e.unpersist()
+    clear_shared_intermediates()
+
+
 def test_bpe_merge_application_is_nonoverlapping_left_to_right(spark):
     """The BPE trainer's string-fold merge application must fuse exactly
     the non-overlapping left-to-right occurrences: 'aaaa' under merge
