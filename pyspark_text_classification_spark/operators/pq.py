@@ -42,14 +42,41 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from pyspark_text_classification_spark.functions.text import (
+    round_half_up,
+    sql_round_half_up,
+)
+from pyspark_text_classification_spark.operators.similarity import (
+    FIXED_CELL_MAX_VECTORS,
+    IVF_CELLS,
+    IVFPQ_AUTO_NPROBE_MIN,
+    IVFPQ_AUTO_NPROBE_MULT,
+    QUANT_SCALE,
+    QUERY_BATCH_MAX,
+    _SQL_IVF_DOT,
+    _SQL_NORMED,
+    _as_double_vec,
+    _rank_topk,
+    auto_nprobe,
+    candidate_cosines,
+    cell_candidates,
+    exact_topk,
+    ivf_assignment,
+    ivf_auto_index,
+    query_batch_ids,
+    recall_at_k,
+    sample_exact_topk,
+    sql_auto_nprobe,
+    sql_n_indexed,
+    sql_query_batch,
+    sql_two_level_cells_cte,
+    with_n_indexed,
+    with_norms,
+)
 from pyspark_text_classification_spark.plans.shared import shared_intermediate
+from pyspark_text_classification_spark.registry import ORACLES as _PQ_ORACLES
 from pyspark_text_classification_spark.registry import query
 from pyspark_text_classification_spark.sources.parquet import fan_out, load_table
-from pyspark_text_classification_spark.operators.similarity import (
-    QUANT_SCALE,
-    _as_double_vec,
-)
-from pyspark_text_classification_spark.functions.text import sql_round_half_up
 
 # Quantizer layout — measured macro-recall@5 at sf0.1 (full ADC / IVF
 # nprobe=6): M=16/SUB=4/K=64 lowest-id seeds 0.422/0.349; the same
@@ -380,11 +407,6 @@ def _sql_adc_qb() -> str:
     made the flat scan's pair work n^2/32, measured 33x at the 10x
     fixture; the cap restores |batch| x n ~ linear.  Below the cap —
     every bundled sf — the batch IS the full sample, hashes unchanged)."""
-    from pyspark_text_classification_spark.operators.similarity import (
-        QUERY_BATCH_MAX,
-        sql_query_batch,
-    )
-
     return sql_query_batch(
         f"(SELECT vec_id FROM q WHERE vec_id % {PQ_QUERY_MOD} = 0)",
         QUERY_BATCH_MAX,
@@ -446,10 +468,6 @@ def similarity_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned-batch audit — SPARK_GRAFT_QUERY_BATCH_CAP=63 — measures the
     fixed-batch growth directly).  Below the cap — every bundled sf —
     the batch is the full sample, so results are unchanged."""
-    from pyspark_text_classification_spark.operators.similarity import (
-        query_batch_ids,
-    )
-
     e = _quantized(spark, sf_dir)
     cb = trained_codebook(spark, sf_dir)
     codes = pq_assign(e, cb).select("vec_id", "m", "code")
@@ -484,64 +502,41 @@ def similarity_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _exact_topk_ground_truth(
     spark: SparkSession, sf_dir: str, max_vec: int | None = None
 ) -> DataFrame:
-    """Exact cosine top-{PQ_NN_K} for the deterministic 1/32 query sample
-    — the ground truth every recall evaluator measures against.
+    """(vec_id, neighbor_id): exact cosine top-{PQ_NN_K} for the
+    deterministic 1/{PQ_QUERY_MOD} query sample — the ground truth every
+    recall gate in this module (the five _recall_vs_exact callers)
+    measures against.
 
-    Session-cached (plans.shared): |sample| x {PQ_NN_K} rows of two longs
-    by construction, while building it is the expensive |sample| x n
-    D-dim fold.  An index-quality dashboard computes this once per corpus
-    snapshot and scores every index variant against it — exactly how the
-    three recall queries here consume it.
+    An index-quality dashboard computes this once per corpus snapshot
+    and scores every index variant against it: the UNCAPPED truth is the
+    1/{PQ_QUERY_MOD}, rank <= {PQ_NN_K} slice of similarity's shared
+    sample truth (sample_exact_topk), the slot the LSH/IVF gates and the
+    kNN family read too.
 
     ``max_vec``: restrict BOTH the query sample and the neighbor universe
     to vec_id < max_vec — the ground truth for the CAPPED fixed-cell
     baselines (their index only covers the capped corpus, so scoring them
     against uncapped truth would measure coverage, not quality, above the
-    cap).  Below the cap — every bundled sf — the two truths are
-    identical.
-
-    The UNCAPPED truth is the rnk <= {PQ_NN_K} slice of the kNN sweep's
-    top-{max(KNN_SWEEP_KS)} superset (same ordering and tie-break), so
-    one session pays the |sample| x n fold ONCE for both consumers."""
+    cap).  It is not a slice of the shared truth, so it takes its own
+    session slot.  Below the cap — every bundled sf — the two truths are
+    identical."""
+    sampled = F.pmod(F.col("vec_id"), F.lit(PQ_QUERY_MOD)) == 0
     if max_vec is None:
         return (
-            _exact_topk_superset(spark, sf_dir)
-            .filter(F.col("rnk") <= PQ_NN_K)
+            sample_exact_topk(spark, sf_dir, PQ_NN_K)
+            .filter(sampled)
             .select("vec_id", "neighbor_id")
         )
-    from pyspark_text_classification_spark.operators.similarity import (
-        _fold_sum,
-        _rank_topk,
-        with_norms,
-    )
 
     def build() -> DataFrame:
-        emb = load_table(spark, sf_dir, "embeddings")
-        if max_vec is not None:
-            emb = emb.filter(F.col("vec_id") < max_vec)
-        e = with_norms(emb)
-        sampled = F.pmod(F.col("vec_id"), F.lit(PQ_QUERY_MOD)) == 0
-        a = e.filter(sampled).select(
-            "vec_id", F.col("v").alias("xv"), F.col("nrm").alias("xn")
-        )
-        b = e.select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("v").alias("yv"),
-            F.col("nrm").alias("yn"),
-        )
-        dot = _fold_sum(
-            F.zip_with(F.col("xv"), F.col("yv"), lambda p, q: p * q)
-        )
-        ex = (
-            a.crossJoin(b)
-            .filter(F.col("vec_id") != F.col("neighbor_id"))
-            .select(
-                "vec_id",
-                "neighbor_id",
-                (dot / (F.col("xn") * F.col("yn"))).alias("cos"),
+        e = with_norms(
+            load_table(spark, sf_dir, "embeddings").filter(
+                F.col("vec_id") < max_vec
             )
         )
-        return _rank_topk(ex, k=PQ_NN_K).select("vec_id", "neighbor_id")
+        return exact_topk(e.filter(sampled), e, PQ_NN_K).select(
+            "vec_id", "neighbor_id"
+        )
 
     return shared_intermediate(
         spark, sf_dir, f"pq_exact_topk_lt{max_vec}", build
@@ -556,61 +551,35 @@ def _recall_vs_exact(
     batch_cap: bool = False,
     ann_bounded: bool = False,
 ) -> DataFrame:
-    """One-row recall@k summary of ANY (vec_id, neighbor_id) ANN result
-    against the exact cosine top-k for the deterministic 1/32 query
-    sample — the Spark twin of _SQL_RECALL_TAIL, shared by every recall
-    query in this module.  ``max_vec`` selects the capped ground truth —
-    pass it for ANN results whose index covers only vec_id < max_vec.
-    ``batch_cap`` restricts the exact side's QUERIES to the *_auto
-    serving queries' QUERY_BATCH_MAX batch (a no-op below the cap):
-    against the unrestricted sample, a batch-capped ANN result would be
-    measured on coverage, not quality, above the cap.  ``ann_bounded``
-    is the caller's EXPLICIT assertion that the ``ann`` frame it
-    supplies is bounded by construction (<= |capped query set| x k rows
-    of two longs) and may broadcast into the hit join — the ext-side
-    caps say nothing about the ann frame's size, so boundedness is
-    declared where the frame is built, never inferred here (ADVICE
-    r11)."""
-    from pyspark_text_classification_spark.functions.text import round_half_up
-
+    """One-row recall@k summary (similarity.recall_at_k) of ANY
+    (vec_id, neighbor_id) ANN result against the exact cosine top-k for
+    the deterministic 1/32 query sample — the Spark twin of
+    _sql_recall_tail, shared by every recall query in this module.
+    ``max_vec`` selects the capped ground truth — pass it for ANN
+    results whose index covers only vec_id < max_vec.  ``batch_cap``
+    restricts the exact side's QUERIES to the *_auto serving queries'
+    QUERY_BATCH_MAX batch (a no-op below the cap): against the
+    unrestricted sample, a batch-capped ANN result would be measured on
+    coverage, not quality, above the cap.  ``ann_bounded`` is the
+    caller's EXPLICIT assertion that the ``ann`` frame it supplies is
+    bounded by construction (<= |capped query set| x k rows of two
+    longs) and may broadcast into the hit join — the ext-side caps say
+    nothing about the ann frame's size, so boundedness is declared where
+    the frame is built, never inferred here (ADVICE r11)."""
     ext = _exact_topk_ground_truth(spark, sf_dir, max_vec=max_vec)
     if batch_cap:
-        from pyspark_text_classification_spark.operators.similarity import (
-            query_batch_ids,
-        )
-
         sampled = load_table(spark, sf_dir, "embeddings").filter(
             F.pmod(F.col("vec_id"), F.lit(PQ_QUERY_MOD)) == 0
         )
         ext = ext.join(
             F.broadcast(query_batch_ids(sampled)), "vec_id", "left_semi"
         )
-
-    from pyspark_text_classification_spark.operators.similarity import (
-        recall_hits,
-    )
-
-    perq = recall_hits(ext, ann, bounded=ann_bounded)
-    out = perq.agg(
-        F.count("*").alias("n_queries"),
-        F.lit(PQ_NN_K).cast("long").alias("k"),
-        round_half_up(
-            F.sum("hits").cast("double")
-            / (float(PQ_NN_K) * F.count("*").cast("double")),
-            4,
-        ).alias("macro_recall"),
-        round_half_up(
-            F.sum(F.when(F.col("hits") == PQ_NN_K, 1).otherwise(0)).cast("double")
-            / F.count("*").cast("double"),
-            4,
-        ).alias("perfect_frac"),
-    )
-    return out
+    return recall_at_k(ext, ann, PQ_NN_K, bounded=ann_bounded)
 
 
 # Exact-ground-truth CTEs (n -> ex -> ext): the DuckDB twin of
 # _exact_topk_ground_truth, shared by every recall oracle in this module
-# and by the kNN label-vote classifier so the exact side is defined once.
+# so the exact side is defined once.
 def _sql_exact_topk_ctes(
     max_vec: int | None = None, batch_cap: bool = False
 ) -> str:
@@ -619,11 +588,6 @@ def _sql_exact_topk_ctes(
     DuckDB twin of _exact_topk_ground_truth(max_vec=...).  ``batch_cap``
     additionally restricts the query side to the *_auto serving batch
     (the _recall_vs_exact twin; no-op below QUERY_BATCH_MAX)."""
-    from pyspark_text_classification_spark.operators.similarity import (
-        QUERY_BATCH_MAX,
-        sql_query_batch,
-    )
-
     src = "embeddings" if max_vec is None else (
         f"(SELECT * FROM embeddings WHERE vec_id < {max_vec})"
     )
@@ -669,9 +633,6 @@ def _sql_exact_topk_ctes(
 """
 
 
-_SQL_EXACT_TOPK_CTES = _sql_exact_topk_ctes()
-
-
 # Generic on-engine recall evaluation: compares an ``annq(vec_id,
 # neighbor_id)`` CTE against the exact cosine top-k for the same
 # deterministic query sample.  ``max_vec`` selects the capped ground
@@ -698,9 +659,6 @@ def _sql_recall_tail(
              AS perfect_frac
     FROM perq
 """
-
-
-_SQL_RECALL_TAIL = _sql_recall_tail()
 
 
 @query(
@@ -788,19 +746,6 @@ def _ivf_pq_scored(spark: SparkSession, sf_dir: str, auto_cells: bool = False):
     FIXED_CELL_MAX_VECTORS on both engines — constant cells make in-cell
     pair work n^2/cells, measured 5.9x at the 10x fixture; below the cap,
     i.e. every bundled sf, results are unchanged); auto is uncapped."""
-    from pyspark_text_classification_spark.operators.similarity import (
-        FIXED_CELL_MAX_VECTORS,
-        IVF_CELLS,
-        IVFPQ_AUTO_NPROBE_MIN,
-        IVFPQ_AUTO_NPROBE_MULT,
-        auto_nprobe,
-        cell_candidates,
-        ivf_assignment,
-        ivf_auto_index,
-        query_batch_ids,
-        with_norms,
-    )
-
     # ---- coarse layer: cosine cells (auto: Lloyd-refined + two-level) ----
     sampled = F.pmod(F.col("vec_id"), F.lit(PQ_QUERY_MOD)) == 0
     if auto_cells:
@@ -904,11 +849,6 @@ def similarity_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     Cost vs similarity_pq_adc_topk: the scored pair count drops ~4x for the
     price of the coarse probe — recall loss is exactly the IVF pruning
     (vectors whose true neighbors live outside the probed cells)."""
-    from pyspark_text_classification_spark.operators.similarity import (
-        FIXED_CELL_MAX_VECTORS,
-        with_n_indexed,
-    )
-
     scored, persisted = _ivf_pq_scored(spark, sf_dir)
     w = Window.partitionBy("q_id").orderBy("adc_d2", "neighbor_id")
     out = with_n_indexed(
@@ -925,19 +865,6 @@ def similarity_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_ivf_pq_ctes(auto_cells: bool = False) -> str:
-    from pyspark_text_classification_spark.operators.similarity import (
-        FIXED_CELL_MAX_VECTORS,
-        IVF_CELLS,
-        IVFPQ_AUTO_NPROBE_MIN,
-        IVFPQ_AUTO_NPROBE_MULT,
-        QUERY_BATCH_MAX,
-        _SQL_IVF_DOT,
-        _SQL_NORMED,
-        sql_auto_nprobe,
-        sql_query_batch,
-        sql_two_level_cells_cte,
-    )
-
     # The auto path's absolute query-batch cap (the Spark twin joins
     # query_batch_ids): the QUERY_BATCH_MAX lowest ids of the 1/MOD
     # sample.  Below the cap — every bundled sf — the IN-set is the full
@@ -1024,11 +951,6 @@ def _sql_ivf_pq_ctes(auto_cells: bool = False) -> str:
 
 
 def _sql_ivf_pq() -> str:
-    from pyspark_text_classification_spark.operators.similarity import (
-        FIXED_CELL_MAX_VECTORS,
-        sql_n_indexed,
-    )
-
     return f"""
     {_sql_ivf_pq_ctes()}
     SELECT q_id, neighbor_id, adc_d2, CAST(rnk AS INT) AS rank,
@@ -1042,8 +964,6 @@ def _sql_ivf_pq() -> str:
     ) WHERE rnk <= {PQ_NN_K}
     """
 
-
-from pyspark_text_classification_spark.registry import ORACLES as _PQ_ORACLES  # noqa: E402
 
 _PQ_ORACLES["similarity_ivf_pq"] = _sql_ivf_pq()
 
@@ -1113,10 +1033,6 @@ def similarity_ivf_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     above the cap would get zero candidates by construction and the
     number would measure coverage instead.  Below the cap (every bundled
     sf) the two truths are identical."""
-    from pyspark_text_classification_spark.operators.similarity import (
-        FIXED_CELL_MAX_VECTORS,
-    )
-
     ann = similarity_ivf_pq(spark, sf_dir).select(
         F.col("q_id").alias("vec_id"), "neighbor_id"
     )
@@ -1127,10 +1043,6 @@ def similarity_ivf_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_ivf_pq_recall() -> str:
-    from pyspark_text_classification_spark.operators.similarity import (
-        FIXED_CELL_MAX_VECTORS,
-    )
-
     return f"""
     {_sql_ivf_pq_ctes()},
     annq AS (
@@ -1216,12 +1128,6 @@ def similarity_ivf_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     query — a bounded, broadcastable join — so the 100 TB cost profile
     is still ADC's, while the ranking error of quantized-L2-vs-cosine
     affects only candidates BELOW the shortlist boundary."""
-    from pyspark_text_classification_spark.operators.similarity import (
-        _rank_topk,
-        candidate_cosines,
-        with_norms,
-    )
-
     scored, persisted = _ivf_pq_scored(spark, sf_dir)
     w = Window.partitionBy("q_id").orderBy("adc_d2", "neighbor_id")
     shortlist = (
@@ -1232,11 +1138,6 @@ def similarity_ivf_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     for df in persisted:
         df.unpersist()
-    from pyspark_text_classification_spark.operators.similarity import (
-        FIXED_CELL_MAX_VECTORS,
-        with_n_indexed,
-    )
-
     e = with_norms(load_table(spark, sf_dir, "embeddings"))
     # the shortlist is bounded by construction (<= |query batch| x
     # RERANK_POOL rows of two longs): broadcast it against the corpus
@@ -1276,16 +1177,11 @@ def _sql_rerank_ctes(auto_cells: bool = False) -> str:
     """
 
 
-from pyspark_text_classification_spark.operators.similarity import (  # noqa: E402
-    FIXED_CELL_MAX_VECTORS as _FC_CAP,
-    sql_n_indexed as _sql_ni,
-)
-
 _PQ_ORACLES["similarity_ivf_pq_rerank"] = f"""
     {_sql_rerank_ctes()}
     SELECT vec_id, neighbor_id,
            {sql_round_half_up('cos', 4)} AS cos_sim, CAST(rnk AS INT) AS rank,
-           {_sql_ni(_FC_CAP)} AS n_indexed
+           {sql_n_indexed(FIXED_CELL_MAX_VECTORS)} AS n_indexed
     FROM (
       SELECT vec_id, neighbor_id, cos,
              row_number() OVER (
@@ -1306,10 +1202,6 @@ def similarity_rerank_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     Measured against the CAPPED ground truth (see
     similarity_ivf_pq_recall) — the rerank stack serves the capped
     fixed-cell index, so its quality gate must share that corpus."""
-    from pyspark_text_classification_spark.operators.similarity import (
-        FIXED_CELL_MAX_VECTORS,
-    )
-
     ann = similarity_ivf_pq_rerank(spark, sf_dir).select(
         "vec_id", "neighbor_id"
     )
@@ -1320,10 +1212,6 @@ def similarity_rerank_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_rerank_recall() -> str:
-    from pyspark_text_classification_spark.operators.similarity import (
-        FIXED_CELL_MAX_VECTORS,
-    )
-
     return f"""
     {_sql_rerank_ctes()},
     annq AS (
@@ -1354,12 +1242,6 @@ def similarity_auto_rerank_recall(spark: SparkSession, sf_dir: str) -> DataFrame
     the RERANK_POOL-deep exact rescore buys back quantization error.
     Closing the symmetry also keeps the nprobe rule honest end-to-end —
     a probe count tuned only for the un-reranked gate could overfit it."""
-    from pyspark_text_classification_spark.operators.similarity import (
-        _rank_topk,
-        candidate_cosines,
-        with_norms,
-    )
-
     scored, persisted = _ivf_pq_scored(spark, sf_dir, auto_cells=True)
     w = Window.partitionBy("q_id").orderBy("adc_d2", "neighbor_id")
     shortlist = (
@@ -1440,7 +1322,7 @@ KNN_SERVE_K = max(KNN_SWEEP_KS)
 
 def _sql_knn_superset_ctes() -> str:
     """n/ex/ext CTEs for the served top-{KNN_SERVE_K} superset with rank
-    and integer weight — the DuckDB twin of _exact_topk_superset, shared
+    and integer weight — the DuckDB twin of _knn_neighbors, shared
     by the served classifier/regressor and the sweep oracle."""
     return f"""n AS (
       SELECT vec_id,
@@ -1529,9 +1411,7 @@ def similarity_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     grain, weighted votes aggregate at (query, label) grain, and the
     argmax window partitions by query — every stage is bounded by
     |sample| x k."""
-    from pyspark_text_classification_spark.functions.text import round_half_up
-
-    ext = _exact_topk_superset(spark, sf_dir)
+    ext = _knn_neighbors(spark, sf_dir)
     sl = F.slice("embedding", 1, KNN_LABEL_DIMS)
     labs = load_table(spark, sf_dir, "embeddings").select(
         "vec_id",
@@ -1622,7 +1502,7 @@ def similarity_knn_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     the classifier — neighbor lists from the session-cached exact
     top-{KNN_SERVE_K} superset (in production, the served ANN index),
     one join at neighbor grain, one bounded aggregate per query."""
-    ext = _exact_topk_superset(spark, sf_dir)
+    ext = _knn_neighbors(spark, sf_dir)
     tgt = load_table(spark, sf_dir, "embeddings").select(
         "vec_id",
         F.floor(F.col("embedding")[0].cast("double") * KNN_REG_SCALE)
@@ -1661,95 +1541,31 @@ def similarity_knn_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
 # weighting) configuration; a deployment reads the table top-down to
 # pick the operating point.
 # --------------------------------------------------------------------------
-def _exact_topk_superset(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(vec_id, neighbor_id, rnk, wt): exact cosine top-{max(KNN_SWEEP_KS)}
-    per sampled query with rank and integer weight — the one candidate
-    superset every sweep configuration slices (session-cached like the
-    k={PQ_NN_K} ground truth)."""
-    from pyspark_text_classification_spark.functions.text import round_half_up
-    from pyspark_text_classification_spark.operators.similarity import (
-        _fold_sum,
-        with_norms,
-    )
-
-    kmax = max(KNN_SWEEP_KS)
-
-    def build() -> DataFrame:
-        e = with_norms(load_table(spark, sf_dir, "embeddings"))
-        a = e.filter(
-            F.pmod(F.col("vec_id"), F.lit(PQ_QUERY_MOD)) == 0
-        ).select("vec_id", F.col("v").alias("xv"), F.col("nrm").alias("xn"))
-        b = e.select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("v").alias("yv"),
-            F.col("nrm").alias("yn"),
+def _knn_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, neighbor_id, rank, wt): exact cosine top-{KNN_SERVE_K}
+    per 1/{PQ_QUERY_MOD}-sampled query with its integer vote weight —
+    the one candidate superset every kNN configuration slices, read from
+    similarity's shared sample truth (sample_exact_topk).  The weight
+    derives from the RAW cosine, floor(cos x {KNN_WEIGHT_SCALE} + 0.5),
+    as the oracle's does — not from the 4-decimal rounded value."""
+    return (
+        sample_exact_topk(spark, sf_dir, KNN_SERVE_K)
+        .filter(F.pmod(F.col("vec_id"), F.lit(PQ_QUERY_MOD)) == 0)
+        .select(
+            "vec_id",
+            "neighbor_id",
+            "rank",
+            F.floor(F.col("cos") * KNN_WEIGHT_SCALE + F.lit(0.5))
+            .cast("long")
+            .alias("wt"),
         )
-        dot = _fold_sum(
-            F.zip_with(F.col("xv"), F.col("yv"), lambda p, q: p * q)
-        )
-        ex = (
-            a.crossJoin(b)
-            .filter(F.col("vec_id") != F.col("neighbor_id"))
-            .select(
-                "vec_id",
-                "neighbor_id",
-                (dot / (F.col("xn") * F.col("yn"))).alias("cos"),
-            )
-        )
-        cos4 = round_half_up(F.col("cos"), 4)
-        w = Window.partitionBy("vec_id").orderBy(cos4.desc(), "neighbor_id")
-        return (
-            ex.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= kmax)
-            .select(
-                "vec_id",
-                "neighbor_id",
-                "rnk",
-                F.floor(F.col("cos") * KNN_WEIGHT_SCALE + F.lit(0.5))
-                .cast("long")
-                .alias("wt"),
-            )
-        )
-
-    return shared_intermediate(
-        spark, sf_dir, f"knn_exact_topk{kmax}", build
     )
 
 
 @query(
     "similarity_knn_sweep",
     oracle=f"""
-    WITH n AS (
-      SELECT vec_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v,
-             sqrt(list_reduce(
-               list_prepend(0.0, list_transform(
-                 list_transform(embedding, x -> CAST(x AS DOUBLE)),
-                 x -> x * x)),
-               (acc, x) -> acc + x)) AS nrm
-      FROM embeddings
-    ),
-    ex AS (
-      SELECT a.vec_id, b.vec_id AS neighbor_id,
-             list_reduce(
-               list_prepend(0.0, list_transform(
-                 range(1, length(a.v) + 1), i -> a.v[i] * b.v[i])),
-               (acc, x) -> acc + x) / (a.nrm * b.nrm) AS cos
-      FROM n a JOIN n b
-        ON a.vec_id % {PQ_QUERY_MOD} = 0 AND a.vec_id <> b.vec_id
-    ),
-    ext AS (
-      SELECT vec_id, neighbor_id, rnk,
-             CAST(floor(cos * {KNN_WEIGHT_SCALE} + 0.5) AS BIGINT) AS wt
-      FROM (
-        SELECT vec_id, neighbor_id, cos,
-               row_number() OVER (
-                 PARTITION BY vec_id
-                 ORDER BY {sql_round_half_up('cos', 4)} DESC, neighbor_id
-               ) AS rnk
-        FROM ex
-      ) WHERE rnk <= {max(KNN_SWEEP_KS)}
-    ),
+    WITH {_sql_knn_superset_ctes()},
     labs AS (
       SELECT vec_id,
              CAST(list_position(embedding[1:{KNN_LABEL_DIMS}],
@@ -1816,9 +1632,7 @@ def similarity_knn_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     table is a {len(KNN_SWEEP_KS)}-row broadcast; votes aggregate at
     (k, query, label) grain — every stage bounded by |sample| x k_max x
     |ks|."""
-    from pyspark_text_classification_spark.functions.text import round_half_up
-
-    ext = _exact_topk_superset(spark, sf_dir)
+    ext = _knn_neighbors(spark, sf_dir)
     sl = F.slice("embedding", 1, KNN_LABEL_DIMS)
     labs = load_table(spark, sf_dir, "embeddings").select(
         "vec_id",
@@ -1839,7 +1653,7 @@ def similarity_knn_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             "neighbor_id",
         )
-        .join(F.broadcast(levels), F.col("rnk") <= F.col("k"))
+        .join(F.broadcast(levels), F.col("rank") <= F.col("k"))
         .groupBy("k", "vec_id", "nlabel")
         .agg(F.count("*").alias("c"), F.sum("wt").alias("ws"))
     )

@@ -510,25 +510,49 @@ def lsh_query_candidates(bk: DataFrame, is_query: Column) -> DataFrame:
     return d1.unionByName(d2).distinct()
 
 
-def recall_hits(ext: DataFrame, ann: DataFrame, bounded: bool = False) -> DataFrame:
-    """Per-query hit counts: ONE left join + ONE aggregate — the exact
-    shape of every recall oracle's perq CTE (``ext LEFT JOIN annq ..
-    GROUP BY vec_id``).  Replaces the semi-join + groupBy + distinct +
-    outer-join chain (3 exchanges, 2 of them SortMergeJoins because
-    checkpointed frames carry no size stats) with one join and one agg.
+def recall_at_k(
+    truth: DataFrame, ann: DataFrame, k: int, bounded: bool = False
+) -> DataFrame:
+    """One-row recall@k summary (n_queries, k, macro_recall,
+    perfect_frac) of an ANN answer ``ann(vec_id, neighbor_id)`` against
+    the exact ``truth(vec_id, neighbor_id)`` — the Spark twin of every
+    recall oracle's perq + summary tail, shared by every recall gate.
+
+    Per-query hits are ONE left join + ONE aggregate, the exact shape of
+    the oracles' ``ext LEFT JOIN annq .. GROUP BY vec_id``; counting the
+    joined marker is exact while ``ann`` is (vec_id, neighbor_id)-unique
+    (tests/test_operators_unit.py pins that for the served frames).
 
     ``bounded=True`` broadcasts the ANN side — legitimate ONLY for gates
     whose served answers are capped by construction (QUERY_BATCH_MAX x k
     rows of two longs); unbounded 1/16-sample gates keep the shuffled
-    join, which is the scale-correct plan for them."""
+    join, which is the scale-correct plan for them.
+
+    Integer sums THEN one division: avg() over hits/k would sum inexact
+    doubles in partition order, and 0.2-step values can land exactly on
+    the rounding boundary — int64 sums are order-free, and one IEEE
+    divide is correctly rounded on both engines."""
     annm = ann.select("vec_id", "neighbor_id", F.lit(1).alias("hit"))
     if bounded:
         annm = F.broadcast(annm)
-    return (
-        ext.join(annm, ["vec_id", "neighbor_id"], "left")
+    perq = (
+        truth.select("vec_id", "neighbor_id")
+        .join(annm, ["vec_id", "neighbor_id"], "left")
         .groupBy("vec_id")
         .agg(F.count("hit").alias("hits"))
-        .select("hits")
+    )
+    n = F.count("*").cast("double")
+    return perq.agg(
+        F.count("*").alias("n_queries"),
+        F.lit(k).cast("long").alias("k"),
+        round_half_up(
+            F.sum("hits").cast("double") / (float(k) * n), 4
+        ).alias("macro_recall"),
+        round_half_up(
+            F.sum(F.when(F.col("hits") == k, 1).otherwise(0)).cast("double")
+            / n,
+            4,
+        ).alias("perfect_frac"),
     )
 
 
@@ -545,7 +569,9 @@ def candidate_cosines(
     query_ids: DataFrame | None = None,
     cand_bounded: bool = False,
 ) -> DataFrame:
-    """Exact sequential-fold cosine for each candidate pair.
+    """Exact sequential-fold cosine for each candidate pair: ``cand``'s
+    columns plus ``cos`` (extra columns, such as nprobe_sweep's
+    entry_rk, pass through).
 
     Default shape: two shuffled corpus joins (x on vec_id, y on
     neighbor_id) — correct for unbounded candidate sets (the LSH pair
@@ -587,10 +613,31 @@ def candidate_cosines(
         joined = F.broadcast(cand).join(y, "neighbor_id").join(x, "vec_id")
     else:
         joined = cand.join(x, "vec_id").join(y, "neighbor_id")
-    return joined.select(
-        "vec_id",
-        "neighbor_id",
-        F.expr(_COS_PAIR_EXPR).alias("cos"),
+    return joined.select(*cand.columns, F.expr(_COS_PAIR_EXPR).alias("cos"))
+
+
+def exact_topk(queries: DataFrame, universe: DataFrame, k: int) -> DataFrame:
+    """(vec_id, neighbor_id, cos, rank): the exact cosine top-``k`` of
+    every ``queries`` row over ``universe``, self pair excluded — the
+    ground truth every recall gate and the kNN family score against.
+    Both inputs are with_norms-shaped ``(vec_id, v, nrm)``.
+
+    The query side BROADCASTS (a sample or a capped batch), so the
+    |queries| x |universe| fold is one map-side pass over the universe
+    and never a CartesianProduct.  The cosine is candidate_cosines'
+    parsed sequential fold (bit-equal to the DuckDB twins' list_reduce),
+    ranked by (4-decimal cosine DESC, neighbor_id) like _rank_topk.
+    ``cos`` stays unrounded, so a derived integer weight (pq's
+    ``floor(cos * 10000 + 0.5)``) reads the raw value, as its oracle
+    does."""
+    x = queries.selectExpr("vec_id", "v AS xv", "nrm AS xn")
+    y = universe.selectExpr("vec_id AS neighbor_id", "v AS yv", "nrm AS yn")
+    return (
+        y.crossJoin(F.broadcast(x))
+        .filter(F.col("vec_id") != F.col("neighbor_id"))
+        .select("vec_id", "neighbor_id", F.expr(_COS_PAIR_EXPR).alias("cos"))
+        .withColumn("rank", F.expr(_RANK_EXPR))
+        .filter(F.col("rank") <= k)
     )
 
 
@@ -1226,56 +1273,43 @@ def similarity_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 RECALL_SAMPLE_MOD = 16  # evaluate every 16th vector as a query
 
 
-def _lsh_exact_ground_truth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact cosine top-{TOP_K} for the deterministic 1/{RECALL_SAMPLE_MOD}
-    query sample — the ground truth the sign-LSH recall evaluator scores
-    against.  Session-cached (plans.shared): |sample| x {TOP_K} rows of
-    two longs by construction; building it is the |sample| x n D-dim
-    fold, the expensive side of any recall measurement."""
+# Depth of the shared sample truth, the largest k any reader may slice:
+# pq's kNN family reads KNN_SERVE_K = 9, the recall gates TOP_K.
+SAMPLE_TRUTH_K = 9
+
+
+def sample_exact_topk(
+    spark: SparkSession, sf_dir: str, k: int = TOP_K
+) -> DataFrame:
+    """(vec_id, neighbor_id, cos, rank), rank <= ``k`` (at most
+    {SAMPLE_TRUTH_K}): the exact cosine top-k of the deterministic
+    1/{RECALL_SAMPLE_MOD} query sample over the whole corpus — the one
+    uncapped ground truth every sample recall gate, pq's uncapped recall
+    gates and the kNN family read.
+
+    One session slot (plans.shared) holds the top-{SAMPLE_TRUTH_K}
+    superset, |sample| x {SAMPLE_TRUTH_K} rows, so a session pays the
+    |sample| x n D-dim fold once: a gate takes its rank <= k slice, and
+    pq's 1/PQ_QUERY_MOD consumers also filter vec_id (that sample is a
+    subset of this one, PQ_QUERY_MOD being a multiple of
+    RECALL_SAMPLE_MOD).  Per-query ranks do not depend on which queries
+    share the fold, so every slice equals its own direct build."""
+
     def build() -> DataFrame:
         e = with_norms(load_table(spark, sf_dir, "embeddings"))
         sampled = F.pmod(F.col("vec_id"), F.lit(RECALL_SAMPLE_MOD)) == 0
-        a = e.filter(sampled).select(
-            "vec_id", F.col("v").alias("xv"), F.col("nrm").alias("xn")
-        )
-        b = e.select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("v").alias("yv"),
-            F.col("nrm").alias("yn"),
-        )
-        dot = _fold_sum(
-            F.zip_with(F.col("xv"), F.col("yv"), lambda p, q: p * q)
-        )
-        ex = (
-            a.crossJoin(b)
-            .filter(F.col("vec_id") != F.col("neighbor_id"))
-            .select(
-                "vec_id",
-                "neighbor_id",
-                (dot / (F.col("xn") * F.col("yn"))).alias("cos"),
-            )
-        )
-        return _rank_topk(ex).select("vec_id", "neighbor_id")
+        return exact_topk(e.filter(sampled), e, SAMPLE_TRUTH_K)
 
-    return shared_intermediate(spark, sf_dir, "lsh_exact_topk", build)
+    truth = shared_intermediate(
+        spark, sf_dir, f"sample_exact_topk{SAMPLE_TRUTH_K}", build
+    )
+    return truth.filter(F.col("rank") <= k)
 
 
-@query(
-    "similarity_recall_eval",
-    oracle=f"""
-    WITH {_SQL_LSH_MP_PRELUDE},
-    p AS ({_SQL_MIRROR}),
-    annq AS (
-      SELECT vec_id, neighbor_id FROM (
-        SELECT vec_id, neighbor_id,
-               row_number() OVER (
-                 PARTITION BY vec_id
-                 ORDER BY {sql_round_half_up('cos', 4)} DESC, neighbor_id
-               ) AS rnk
-        FROM p WHERE vec_id % {RECALL_SAMPLE_MOD} = 0
-      ) WHERE rnk <= {TOP_K}
-    ),
-    ex AS (
+# DuckDB twin of sample_exact_topk(k=TOP_K) over the normed view ``n``
+# (ex -> ext), and the perq + summary tail twin of recall_at_k: shared
+# verbatim by the 1/{RECALL_SAMPLE_MOD}-sample recall oracles
+_SQL_SAMPLE_EXACT_CTES = f"""ex AS (
       SELECT a.vec_id, b.vec_id AS neighbor_id,
              list_reduce(
                list_prepend(0.0, list_transform(
@@ -1293,8 +1327,9 @@ def _lsh_exact_ground_truth(spark: SparkSession, sf_dir: str) -> DataFrame:
                ) AS rnk
         FROM ex
       ) WHERE rnk <= {TOP_K}
-    ),
-    perq AS (
+    )"""
+
+_SQL_RECALL_SUMMARY = f"""perq AS (
       SELECT ext.vec_id,
              CAST(count(annq.neighbor_id) AS BIGINT) AS hits
       FROM ext LEFT JOIN annq
@@ -1310,7 +1345,26 @@ def _lsh_exact_ground_truth(spark: SparkSession, sf_dir: str) -> DataFrame:
                f'CAST(sum(CASE WHEN hits = {TOP_K} THEN 1 ELSE 0 END)'
                ' AS DOUBLE) / count(*)', 4)}
              AS perfect_frac
-    FROM perq
+    FROM perq"""
+
+
+@query(
+    "similarity_recall_eval",
+    oracle=f"""
+    WITH {_SQL_LSH_MP_PRELUDE},
+    p AS ({_SQL_MIRROR}),
+    annq AS (
+      SELECT vec_id, neighbor_id FROM (
+        SELECT vec_id, neighbor_id,
+               row_number() OVER (
+                 PARTITION BY vec_id
+                 ORDER BY {sql_round_half_up('cos', 4)} DESC, neighbor_id
+               ) AS rnk
+        FROM p WHERE vec_id % {RECALL_SAMPLE_MOD} = 0
+      ) WHERE rnk <= {TOP_K}
+    ),
+    {_SQL_SAMPLE_EXACT_CTES},
+    {_SQL_RECALL_SUMMARY}
     """,
 )
 def similarity_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1349,31 +1403,11 @@ def similarity_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = lsh_query_candidates(bk, sampled)
     ann = _rank_topk(candidate_cosines(e, cand)).select("vec_id", "neighbor_id")
 
-    # exact side: session-cached ground truth (|sample| x k rows; the
-    # |sample| x n fold that builds it runs once per corpus snapshot)
-    ext = _lsh_exact_ground_truth(spark, sf_dir)
-
-    # sample-scale x sample-scale: both sides grow with the corpus, so
-    # the join stays shuffled (no broadcast) — the scale-correct plan
-    perq = recall_hits(ext, ann)
-    # integer-sum THEN one division: avg() over hits/k would sum inexact
-    # doubles in partition order, and 0.2-step values can land exactly on
-    # the rounding boundary — int64 sums are order-free, one IEEE divide
-    # is correctly rounded on both engines
-    out = perq.agg(
-        F.count("*").alias("n_queries"),
-        F.lit(TOP_K).cast("long").alias("k"),
-        round_half_up(
-            F.sum("hits").cast("double")
-            / (float(TOP_K) * F.count("*").cast("double")),
-            4,
-        ).alias("macro_recall"),
-        round_half_up(
-            F.sum(F.when(F.col("hits") == TOP_K, 1).otherwise(0)).cast("double")
-            / F.count("*").cast("double"),
-            4,
-        ).alias("perfect_frac"),
-    )
+    # exact side: the session-cached sample truth (|sample| x k rows; the
+    # |sample| x n fold that builds it runs once per corpus snapshot).
+    # Sample-scale x sample-scale: both sides grow with the corpus, so
+    # the hit join stays shuffled (no broadcast) — the scale-correct plan
+    out = recall_at_k(sample_exact_topk(spark, sf_dir), ann, TOP_K)
     return _finalize(out, e, bk)
 
 
@@ -2838,42 +2872,8 @@ def similarity_filtered_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM p
       ) WHERE rnk <= {TOP_K}
     ),
-    ex AS (
-      SELECT a.vec_id, b.vec_id AS neighbor_id,
-             list_reduce(
-               list_prepend(0.0, list_transform(
-                 range(1, length(a.v) + 1), i -> a.v[i] * b.v[i])),
-               (acc, x) -> acc + x) / (a.nrm * b.nrm) AS cos
-      FROM n a JOIN n b
-        ON a.vec_id % {RECALL_SAMPLE_MOD} = 0 AND a.vec_id <> b.vec_id
-    ),
-    ext AS (
-      SELECT vec_id, neighbor_id FROM (
-        SELECT vec_id, neighbor_id,
-               row_number() OVER (
-                 PARTITION BY vec_id
-                 ORDER BY {sql_round_half_up('cos', 4)} DESC, neighbor_id
-               ) AS rnk
-        FROM ex
-      ) WHERE rnk <= {TOP_K}
-    ),
-    perq AS (
-      SELECT ext.vec_id,
-             CAST(count(annq.neighbor_id) AS BIGINT) AS hits
-      FROM ext LEFT JOIN annq
-        ON ext.vec_id = annq.vec_id AND ext.neighbor_id = annq.neighbor_id
-      GROUP BY 1
-    )
-    SELECT CAST(count(*) AS BIGINT) AS n_queries,
-           CAST({TOP_K} AS BIGINT) AS k,
-           {sql_round_half_up(
-               f'CAST(sum(hits) AS DOUBLE) / ({TOP_K}.0 * count(*))', 4)}
-             AS macro_recall,
-           {sql_round_half_up(
-               f'CAST(sum(CASE WHEN hits = {TOP_K} THEN 1 ELSE 0 END)'
-               ' AS DOUBLE) / count(*)', 4)}
-             AS perfect_frac
-    FROM perq
+    {_SQL_SAMPLE_EXACT_CTES},
+    {_SQL_RECALL_SUMMARY}
     """,
 )
 def similarity_ivf_append_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2910,25 +2910,9 @@ def similarity_ivf_append_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     ann = _rank_topk(candidate_cosines(e, cand)).select(
         "vec_id", "neighbor_id"
     )
-    ext = _lsh_exact_ground_truth(spark, sf_dir)
-    # 1/16-sample gate: both sides corpus-proportional, keep the join
-    # shuffled (recall_hits removes the distinct + outer-join exchanges)
-    perq = recall_hits(ext, ann)
-    out = perq.agg(
-        F.count("*").alias("n_queries"),
-        F.lit(TOP_K).cast("long").alias("k"),
-        round_half_up(
-            F.sum("hits").cast("double")
-            / (float(TOP_K) * F.count("*").cast("double")),
-            4,
-        ).alias("macro_recall"),
-        round_half_up(
-            F.sum(F.when(F.col("hits") == TOP_K, 1).otherwise(0))
-            .cast("double")
-            / F.count("*").cast("double"),
-            4,
-        ).alias("perfect_frac"),
-    )
+    # 1/16-sample gate: both sides corpus-proportional, so the hit join
+    # stays shuffled
+    out = recall_at_k(sample_exact_topk(spark, sf_dir), ann, TOP_K)
     return _finalize(out, e, ranked)
 
 
@@ -2991,23 +2975,7 @@ def similarity_ivf_append_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM ex
       ) WHERE rnk <= {TOP_K}
     ),
-    perq AS (
-      SELECT ext.vec_id,
-             CAST(count(annq.neighbor_id) AS BIGINT) AS hits
-      FROM ext LEFT JOIN annq
-        ON ext.vec_id = annq.vec_id AND ext.neighbor_id = annq.neighbor_id
-      GROUP BY 1
-    )
-    SELECT CAST(count(*) AS BIGINT) AS n_queries,
-           CAST({TOP_K} AS BIGINT) AS k,
-           {sql_round_half_up(
-               f'CAST(sum(hits) AS DOUBLE) / ({TOP_K}.0 * count(*))', 4)}
-             AS macro_recall,
-           {sql_round_half_up(
-               f'CAST(sum(CASE WHEN hits = {TOP_K} THEN 1 ELSE 0 END)'
-               ' AS DOUBLE) / count(*)', 4)}
-             AS perfect_frac
-    FROM perq
+    {_SQL_RECALL_SUMMARY}
     """,
 )
 def similarity_ann_ivf_auto_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3042,30 +3010,14 @@ def similarity_ann_ivf_auto_recall(spark: SparkSession, sf_dir: str) -> DataFram
     # QUERY_BATCH_MAX, i.e. every bundled sf): against the unrestricted
     # sample the gate would measure batch COVERAGE above the cap, not
     # index quality — the same principle as the capped gates' max_vec
-    ext = _lsh_exact_ground_truth(spark, sf_dir).join(
+    ext = sample_exact_topk(spark, sf_dir).join(
         F.broadcast(query_batch_ids(load_table(spark, sf_dir, "embeddings"))),
         "vec_id",
         "left_semi",
     )
     # served snapshot + batch-capped ground truth: both bounded at
     # QUERY_BATCH_MAX x k rows by construction, so the ANN side broadcasts
-    perq = recall_hits(ext, ann, bounded=True)
-    return perq.agg(
-        F.count("*").alias("n_queries"),
-        F.lit(TOP_K).cast("long").alias("k"),
-        round_half_up(
-            F.sum("hits").cast("double")
-            / (float(TOP_K) * F.count("*").cast("double")),
-            4,
-        ).alias("macro_recall"),
-        round_half_up(
-            F.sum(F.when(F.col("hits") == TOP_K, 1).otherwise(0)).cast(
-                "double"
-            )
-            / F.count("*").cast("double"),
-            4,
-        ).alias("perfect_frac"),
-    )
+    return recall_at_k(ext, ann, TOP_K, bounded=True)
 
 
 # --- SemDeDup with corpus-sized cell count (the scale-correct variant) -------
@@ -3207,25 +3159,7 @@ _SWEEP_MAX = max(SWEEP_LEVELS)
         FROM pr JOIN lv ON pr.entry_rk <= lv.nprobe
       ) WHERE rnk <= {TOP_K}
     ),
-    ex AS (
-      SELECT a.vec_id, b.vec_id AS neighbor_id,
-             list_reduce(
-               list_prepend(0.0, list_transform(
-                 range(1, length(a.v) + 1), i -> a.v[i] * b.v[i])),
-               (acc, x) -> acc + x) / (a.nrm * b.nrm) AS cos
-      FROM n a JOIN n b
-        ON a.vec_id % {RECALL_SAMPLE_MOD} = 0 AND a.vec_id <> b.vec_id
-    ),
-    ext AS (
-      SELECT vec_id, neighbor_id FROM (
-        SELECT vec_id, neighbor_id,
-               row_number() OVER (
-                 PARTITION BY vec_id
-                 ORDER BY {sql_round_half_up('cos', 4)} DESC, neighbor_id
-               ) AS rnk
-        FROM ex
-      ) WHERE rnk <= {TOP_K}
-    ),
+    {_SQL_SAMPLE_EXACT_CTES},
     tl AS (SELECT lv.nprobe, ext.vec_id, ext.neighbor_id FROM lv CROSS JOIN ext),
     perq AS (
       SELECT tl.nprobe, tl.vec_id,
@@ -3286,25 +3220,7 @@ def similarity_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("vec_id", "neighbor_id")
         .agg(F.min("rk").cast("long").alias("entry_rk"))
     )
-    x = e.select(
-        "vec_id", F.col("v").alias("xv"), F.col("nrm").alias("xn")
-    )
-    y = e.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("v").alias("yv"),
-        F.col("nrm").alias("yn"),
-    )
-    dot = _fold_sum(F.zip_with(F.col("xv"), F.col("yv"), lambda p, q: p * q))
-    pr = (
-        cand.join(x, "vec_id")
-        .join(y, "neighbor_id")
-        .select(
-            "vec_id",
-            "neighbor_id",
-            "entry_rk",
-            (dot / (F.col("xn") * F.col("yn"))).alias("cos"),
-        )
-    )
+    pr = candidate_cosines(e, cand)
     levels = spark.range(1).select(
         F.explode(
             F.array(*[F.lit(int(x_)) for x_ in SWEEP_LEVELS])
@@ -3320,8 +3236,10 @@ def similarity_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rnk") <= TOP_K)
         .select("nprobe", "vec_id", "neighbor_id")
     )
-    truth_lv = _lsh_exact_ground_truth(spark, sf_dir).crossJoin(
-        F.broadcast(levels)
+    truth_lv = (
+        sample_exact_topk(spark, sf_dir)
+        .select("vec_id", "neighbor_id")
+        .crossJoin(F.broadcast(levels))
     )
     # per-level hit counts in ONE left join + ONE aggregate (the oracle
     # perq CTE's exact shape) — replaces the semi-join + distinct +
@@ -3606,52 +3524,19 @@ def similarity_ivf_delete_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def build_ext() -> DataFrame:
-        samp = (
-            e.filter(F.pmod(F.col("vec_id"), F.lit(RECALL_SAMPLE_MOD)) == 0)
-            .join(tomb, "vec_id", "left_anti")
+        surv = e.join(tomb, "vec_id", "left_anti")
+        samp = surv.filter(
+            F.pmod(F.col("vec_id"), F.lit(RECALL_SAMPLE_MOD)) == 0
         )
-        qb = F.broadcast(query_batch_ids(samp))
-        x = e.join(qb, "vec_id").select(
-            "vec_id", F.col("v").alias("xv"), F.col("nrm").alias("xn")
-        )
-        y = e.join(tomb, "vec_id", "left_anti").select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("v").alias("yv"),
-            F.col("nrm").alias("yn"),
-        )
-        dot = _fold_sum(
-            F.zip_with(F.col("xv"), F.col("yv"), lambda p, q: p * q)
-        )
-        ex = (
-            x.crossJoin(y)
-            .filter(F.col("vec_id") != F.col("neighbor_id"))
-            .select(
-                "vec_id",
-                "neighbor_id",
-                (dot / (F.col("xn") * F.col("yn"))).alias("cos"),
-            )
-        )
-        return _rank_topk(ex).select("vec_id", "neighbor_id")
+        queries = e.join(F.broadcast(query_batch_ids(samp)), "vec_id")
+        return exact_topk(queries, surv, TOP_K).select("vec_id", "neighbor_id")
 
     ext = shared_intermediate(
         spark, sf_dir, "ivf_delete_exact_topk", build_ext
     )
     # both snapshot slots are batch-capped (|batch| x k rows): broadcast
-    perq = recall_hits(ext, ann, bounded=True)
     nd = tomb.agg(F.count("*").cast("long").alias("n_deleted"))
-    out = perq.agg(
-        F.count("*").alias("n_queries"),
-        F.lit(TOP_K).cast("long").alias("k"),
-        round_half_up(
-            F.sum("hits").cast("double")
-            / (float(TOP_K) * F.count("*").cast("double")),
-            4,
-        ).alias("macro_recall"),
-        round_half_up(
-            F.sum(F.when(F.col("hits") == TOP_K, 1).otherwise(0))
-            .cast("double")
-            / F.count("*").cast("double"),
-            4,
-        ).alias("perfect_frac"),
-    ).crossJoin(F.broadcast(nd))
+    out = recall_at_k(ext, ann, TOP_K, bounded=True).crossJoin(
+        F.broadcast(nd)
+    )
     return _finalize(out, e)

@@ -8,9 +8,14 @@ tables every time one of their members runs:
   pair lists;
 - the PQ serving family re-trains the identical codebook and re-encodes
   the corpus;
-- every recall evaluator re-computes the identical exact-top-k ground
-  truth (the |sample| x n brute-force fold, the expensive side of any
-  recall measurement).
+- every recall evaluator re-computes an exact-top-k ground truth (the
+  |sample| x n brute-force fold of ``operators.similarity.exact_topk``,
+  the expensive side of any recall measurement).  Three slots hold
+  them: ``sample_exact_topk9``, the top-9 superset of the 1/16 query
+  sample that the LSH/IVF recall gates, pq's uncapped gates and the kNN
+  family all slice; ``pq_exact_topk_lt<cap>``, the capped fixed-cell
+  truth; and ``ivf_delete_exact_topk``, the truth over the corpus
+  left after the tombstone delete.
 
 In production these are classic build-once-serve-many artifacts: a
 PageRank service materializes its edge list before iterating, an ANN

@@ -1235,7 +1235,7 @@ def test_bpe_iter3_degenerate_corpora(spark, tmp_path):
 
 
 def test_served_ann_frames_are_pair_unique(spark, sf_dir):
-    """recall_hits counts hits via LEFT JOIN + count(hit), which is exact
+    """recall_at_k counts hits via LEFT JOIN + count(hit), which is exact
     ONLY while the ANN side is (vec_id, neighbor_id)-unique — and that
     uniqueness rests on the rank-1-members/distinct-probes invariants
     whose enforcing .distinct() calls round 11 removed (they were no-ops
@@ -1262,3 +1262,50 @@ def test_served_ann_frames_are_pair_unique(spark, sf_dir):
             "distinct-probes invariant regressed; recall gates upstream "
             "of this would overcount hits"
         )
+
+
+def test_sample_truth_is_one_fold_per_session(spark, sf_dir, monkeypatch):
+    """The LSH recall gate, the kNN classifier and the PQ recall gate
+    read ONE exact ground truth: the top-SAMPLE_TRUTH_K superset of the
+    1/16 query sample (sample_exact_topk).  A cold session folds that
+    sample against the corpus once for all three (two folds before the
+    truths were merged), its top-5 slice equals a brute-force top-5 over
+    every pair, and each query returns the same rows when it builds the
+    truth alone after a fresh clear."""
+    from pyspark_text_classification_spark.all_queries import QUERIES
+    from pyspark_text_classification_spark.operators import pq
+    from pyspark_text_classification_spark.operators import similarity as S
+    from pyspark_text_classification_spark.plans.shared import (
+        clear_shared_intermediates,
+    )
+    from pyspark_text_classification_spark.sources.parquet import load_table
+
+    names = (
+        "similarity_recall_eval",
+        "similarity_knn_classify",
+        "similarity_pq_recall",
+    )
+    folds = []
+    real = S.exact_topk
+
+    def counting(queries, universe, k):
+        folds.append(k)
+        return real(queries, universe, k)
+
+    monkeypatch.setattr(S, "exact_topk", counting)
+    monkeypatch.setattr(pq, "exact_topk", counting)
+    clear_shared_intermediates()
+    shared = {n: sorted(QUERIES[n](spark, sf_dir).collect()) for n in names}
+    assert folds == [S.SAMPLE_TRUTH_K], folds
+
+    e = S.with_norms(load_table(spark, sf_dir, "embeddings"))
+    sampled = F.pmod(F.col("vec_id"), F.lit(S.RECALL_SAMPLE_MOD)) == 0
+    brute = S._rank_topk(S.pairwise_cosine(e).filter(sampled), S.TOP_K)
+    cols = ("vec_id", "neighbor_id", "rank")
+    want = sorted(brute.select(*cols).collect())
+    got = sorted(S.sample_exact_topk(spark, sf_dir).select(*cols).collect())
+    assert want and got == want
+
+    for n in names:
+        clear_shared_intermediates()
+        assert sorted(QUERIES[n](spark, sf_dir).collect()) == shared[n], n

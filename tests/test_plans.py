@@ -286,13 +286,25 @@ def test_weighted_sample_is_single_window_exchange(spark, sf_dir):
 def test_recall_eval_exact_side_broadcasts_sampled_queries(spark, sf_dir, monkeypatch):
     """The exact ground-truth side restricts the fold to |sample| x n via a
     broadcast of the filtered query sample — the plan must contain no
-    CartesianProduct (the ANN side stays a bucket equi-join)."""
+    CartesianProduct (the ANN side stays a bucket equi-join).  A warm
+    truth slot plans as a scan and hides the fold, so the cold
+    exact_topk plan is checked too: a broadcast nested-loop join."""
+    from pyspark.sql import functions as F
+
     from pyspark_text_classification_spark.operators import similarity
+    from pyspark_text_classification_spark.sources.parquet import load_table
 
     monkeypatch.setattr(similarity, "EAGER_RELEASE", False)
     df = QUERIES["similarity_recall_eval"](spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan, plan
+
+    e = similarity.with_norms(load_table(spark, sf_dir, "embeddings"))
+    sampled = F.pmod(F.col("vec_id"), F.lit(similarity.RECALL_SAMPLE_MOD)) == 0
+    cold = similarity.exact_topk(e.filter(sampled), e, similarity.TOP_K)
+    plan = cold._jdf.queryExecution().executedPlan().toString()
+    assert "CartesianProduct" not in plan, plan
+    assert "BroadcastNestedLoopJoin" in plan, plan
 
 
 def test_rfm_has_no_global_window(spark, sf_dir):

@@ -141,6 +141,24 @@ print(*opened, sep="\\n")
     assert out.stdout.split() == []
 
 
+# sha256 of json.dumps(sorted(ORACLES.items())): a change that edits an
+# oracle string on purpose updates this pin and says why in CHANGES.md
+ORACLE_DIGEST = "f5dd869a55d57f57cfd28efddc7fa215f9f5c13742f56392b79412236f6f25b1"
+
+
+def test_oracle_dict_is_pinned():
+    """Outputs do not change unless a change says why: the registry keeps
+    its 285 queries and 282 DuckDB oracles, and the oracle strings hash
+    to the pinned digest, byte for byte."""
+    import hashlib
+
+    from pyspark_text_classification_spark.all_queries import ORACLES, QUERIES
+
+    assert (len(QUERIES), len(ORACLES)) == (285, 282)
+    blob = json.dumps(sorted(ORACLES.items())).encode()
+    assert hashlib.sha256(blob).hexdigest() == ORACLE_DIGEST
+
+
 @pytest.mark.parametrize("module", ["__spark_entry__", "bench"])
 def test_driver_contract_refuses_audit_pin(monkeypatch, module):
     """The batch-cap env pin is scale-audit-only (ADVICE r10): importing
