@@ -56,6 +56,7 @@ from pyspark_text_classification_spark.operators.similarity import (
     _SQL_IVF_DOT,
     _SQL_NORMED,
     _as_double_vec,
+    _finalize,
     _rank_topk,
     auto_nprobe,
     candidate_cosines,
@@ -63,6 +64,7 @@ from pyspark_text_classification_spark.operators.similarity import (
     exact_topk,
     ivf_assignment,
     ivf_auto_index,
+    probe,
     query_batch_ids,
     recall_at_k,
     sample_exact_topk,
@@ -733,11 +735,11 @@ def similarity_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _ivf_pq_scored(spark: SparkSession, sf_dir: str, auto_cells: bool = False):
     """The composed system's ADC-scored candidate pairs (q_id,
-    neighbor_id, adc_d2).  Returns (scored, persisted) — the caller
-    ranks/limits, eagerly checkpoints its result, then unpersists each
-    frame in ``persisted`` (the dedup.py cache-release pattern).  Shared
-    by similarity_ivf_pq (top-k straight off ADC) and
-    similarity_ivf_pq_rerank (wider shortlist, exact rescore).
+    neighbor_id, adc_d2).  Returns (scored, persisted): ``_adc_topk``
+    ranks and checkpoints the top-k, then releases each frame in
+    ``persisted``; the plan scripts read the pair itself.  Shared by
+    similarity_ivf_pq (top-k straight off ADC) and the rerank paths
+    (wider shortlist, exact rescore).
 
     ``auto_cells`` swaps the fixed {IVF_CELLS}-cell coarse layer for the
     corpus-sized cells = max(16, floor(sqrt(n))) rule (see
@@ -749,39 +751,26 @@ def _ivf_pq_scored(spark: SparkSession, sf_dir: str, auto_cells: bool = False):
     # ---- coarse layer: cosine cells (auto: Lloyd-refined + two-level) ----
     sampled = F.pmod(F.col("vec_id"), F.lit(PQ_QUERY_MOD)) == 0
     if auto_cells:
-        # The shared *_auto index value: one count sizes the cell
-        # count, the probe count, the Lloyd sample stride and the
-        # super-cell count, and the member table is the session's one
-        # two-level build (~n x 4·n^(1/4) distance work instead of the
-        # flat n x cells ~ n^1.5).  The composed system probes max(6,
-        # 3*isqrt(cells)) cells — measured against PQ loss stacking on
-        # IVF pruning (see similarity.py's IVFPQ_AUTO_NPROBE_*
-        # rationale); the bounded query batch ranks ALL cells exactly
-        # (batch x cells is sublinear).
+        # The shared *_auto index value, probed at max(6, 3*isqrt(cells))
+        # cells: PQ loss stacks on IVF pruning (similarity.py's
+        # IVFPQ_AUTO_NPROBE_* rationale).  The query batch is capped
+        # ABSOLUTELY at the QUERY_BATCH_MAX lowest sample ids (mirrored
+        # in the oracle; the full sample at every bundled sf): an
+        # uncapped 1/PQ_QUERY_MOD sample re-grows total probe work
+        # ~n^(7/4) once nprobe scales (round-7 audit: 8.5x at 10x).
         index = ivf_auto_index(spark, sf_dir)
-        n = index.e
+        qb = query_batch_ids(index.raw.filter(sampled))
         nprobe = auto_nprobe(
             index.cells, IVFPQ_AUTO_NPROBE_MULT, IVFPQ_AUTO_NPROBE_MIN
         )
-        members = index.members
-        # Bound the auto path's query batch ABSOLUTELY: the 1/PQ_QUERY_MOD
-        # sample still scales with the corpus, so without a cap total
-        # probe work re-grows ~n^(7/4) once nprobe correctly scales
-        # (round-7 audit: 8.5x at 10x).  The batch is the QUERY_BATCH_MAX
-        # lowest ids of the sample (mirrored in the oracle); below the
-        # cap — every bundled sf — it IS the full sample.
-        qb = F.broadcast(query_batch_ids(index.raw.filter(sampled)))
-        probes = ivf_assignment(
-            n.join(qb, "vec_id"), index.cents, nprobe
-        ).select("vec_id", "cent_id")
-        persisted = [n]
+        probes = probe(index, qb, nprobe)
+        members, persisted = index.members, [index.e]
     else:
         n = with_norms(
             load_table(spark, sf_dir, "embeddings").filter(
                 F.col("vec_id") < FIXED_CELL_MAX_VECTORS
             )
         ).persist()
-        nprobe = IVFPQ_NPROBE
         cents = (
             n.orderBy("vec_id")
             .limit(IVF_CELLS)
@@ -791,7 +780,7 @@ def _ivf_pq_scored(spark: SparkSession, sf_dir: str, auto_cells: bool = False):
                 F.col("nrm").alias("cnrm"),
             )
         )
-        ranked = ivf_assignment(n, cents, nprobe).persist()
+        ranked = ivf_assignment(n, cents, IVFPQ_NPROBE).persist()
         members = ranked.filter(F.col("rk") == 1).select("vec_id", "cent_id")
         probes = ranked.filter(sampled).select("vec_id", "cent_id")
         persisted = [ranked, n]
@@ -810,7 +799,7 @@ def _ivf_pq_scored(spark: SparkSession, sf_dir: str, auto_cells: bool = False):
     )
     queries_q = e.filter(sampled)
     if auto_cells:
-        queries_q = queries_q.join(qb, "vec_id")
+        queries_q = queries_q.join(F.broadcast(qb), "vec_id")
     lut = (
         _subspaces(queries_q)
         .withColumnRenamed("vec_id", "q_id")
@@ -831,6 +820,22 @@ def _ivf_pq_scored(spark: SparkSession, sf_dir: str, auto_cells: bool = False):
     return scored, persisted
 
 
+def _adc_topk(
+    spark: SparkSession, sf_dir: str, k: int, auto_cells: bool = False
+) -> DataFrame:
+    """(q_id, neighbor_id, adc_d2, rank): the composed system's ADC
+    top-``k`` per query, ranked by (adc_d2, neighbor_id) — the one
+    rank -> checkpoint -> release step of the IVF+PQ queries.
+    ``_finalize`` checkpoints the small result, then unpersists the
+    frames ``_ivf_pq_scored`` persisted."""
+    scored, persisted = _ivf_pq_scored(spark, sf_dir, auto_cells)
+    w = Window.partitionBy("q_id").orderBy("adc_d2", "neighbor_id")
+    topk = scored.select(
+        "q_id", "neighbor_id", "adc_d2", F.row_number().over(w).alias("rank")
+    ).filter(F.col("rank") <= k)
+    return _finalize(topk, *persisted)
+
+
 @query(
     "similarity_ivf_pq",
     oracle=None,  # assembled below from the PQ prelude + the IVF CTEs
@@ -849,19 +854,11 @@ def similarity_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     Cost vs similarity_pq_adc_topk: the scored pair count drops ~4x for the
     price of the coarse probe — recall loss is exactly the IVF pruning
     (vectors whose true neighbors live outside the probed cells)."""
-    scored, persisted = _ivf_pq_scored(spark, sf_dir)
-    w = Window.partitionBy("q_id").orderBy("adc_d2", "neighbor_id")
-    out = with_n_indexed(
-        scored.select(
-            "q_id", "neighbor_id", "adc_d2",
-            F.row_number().over(w).alias("rank"),
-        ).filter(F.col("rank") <= PQ_NN_K),
+    return with_n_indexed(
+        _adc_topk(spark, sf_dir, PQ_NN_K),
         load_table(spark, sf_dir, "embeddings"),
         FIXED_CELL_MAX_VECTORS,
-    ).localCheckpoint(eager=True)
-    for df in persisted:
-        df.unpersist()
-    return out
+    )
 
 
 def _sql_ivf_pq_ctes(auto_cells: bool = False) -> str:
@@ -985,19 +982,7 @@ def similarity_ivf_pq_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     sqrt-cell index.  The fine PQ layer (trained codebook, 24-byte
     codes, per-query LUT) is byte-identical to the fixed-cell twin —
     sizing moves only WHERE candidates come from."""
-    scored, persisted = _ivf_pq_scored(spark, sf_dir, auto_cells=True)
-    w = Window.partitionBy("q_id").orderBy("adc_d2", "neighbor_id")
-    out = (
-        scored.select(
-            "q_id", "neighbor_id", "adc_d2",
-            F.row_number().over(w).alias("rank"),
-        )
-        .filter(F.col("rank") <= PQ_NN_K)
-        .localCheckpoint(eager=True)
-    )
-    for df in persisted:
-        df.unpersist()
-    return out
+    return _adc_topk(spark, sf_dir, PQ_NN_K, auto_cells=True)
 
 
 def _sql_ivf_pq_auto() -> str:
@@ -1042,9 +1027,12 @@ def similarity_ivf_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_ivf_pq_recall() -> str:
+def _sql_ivf_pq_recall(auto_cells: bool = False) -> str:
+    """The fixed-cell gate scores against the capped truth, the auto
+    gate against the batch-capped one."""
+    cap = None if auto_cells else FIXED_CELL_MAX_VECTORS
     return f"""
-    {_sql_ivf_pq_ctes()},
+    {_sql_ivf_pq_ctes(auto_cells=auto_cells)},
     annq AS (
       SELECT q_id AS vec_id, neighbor_id FROM (
         SELECT q_id, neighbor_id,
@@ -1054,7 +1042,7 @@ def _sql_ivf_pq_recall() -> str:
         FROM scored
       ) WHERE rnk <= {PQ_NN_K}
     ),
-    {_sql_recall_tail(FIXED_CELL_MAX_VECTORS)}
+    {_sql_recall_tail(cap, batch_cap=auto_cells)}
     """
 
 
@@ -1086,23 +1074,9 @@ def similarity_ivf_pq_auto_recall(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-def _sql_ivf_pq_auto_recall() -> str:
-    return f"""
-    {_sql_ivf_pq_ctes(auto_cells=True)},
-    annq AS (
-      SELECT q_id AS vec_id, neighbor_id FROM (
-        SELECT q_id, neighbor_id,
-               row_number() OVER (
-                 PARTITION BY q_id ORDER BY adc_d2, neighbor_id
-               ) AS rnk
-        FROM scored
-      ) WHERE rnk <= {PQ_NN_K}
-    ),
-    {_sql_recall_tail(batch_cap=True)}
-    """
-
-
-_PQ_ORACLES["similarity_ivf_pq_auto_recall"] = _sql_ivf_pq_auto_recall()
+_PQ_ORACLES["similarity_ivf_pq_auto_recall"] = _sql_ivf_pq_recall(
+    auto_cells=True
+)
 
 
 # --------------------------------------------------------------------------
@@ -1119,6 +1093,24 @@ _PQ_ORACLES["similarity_ivf_pq_auto_recall"] = _sql_ivf_pq_auto_recall()
 RERANK_POOL = 64
 
 
+def _reranked(
+    spark: SparkSession, sf_dir: str, auto_cells: bool = False
+) -> DataFrame:
+    """(vec_id, neighbor_id, cos_sim, rank): the ADC top-{RERANK_POOL}
+    shortlist rescored by exact cosine, top-{PQ_NN_K} — the second stage
+    both rerank paths share.  The shortlist is bounded by construction
+    (<= |query batch| x RERANK_POOL rows of two longs), so it broadcasts
+    against the corpus neighbor side with the shortlist-derived query
+    vectors: the exact rescore never shuffles the corpus (r12)."""
+    shortlist = _adc_topk(spark, sf_dir, RERANK_POOL, auto_cells).select(
+        F.col("q_id").alias("vec_id"), "neighbor_id"
+    )
+    e = with_norms(load_table(spark, sf_dir, "embeddings"))
+    return _rank_topk(
+        candidate_cosines(e, shortlist, cand_bounded=True), PQ_NN_K
+    )
+
+
 @query("similarity_ivf_pq_rerank", oracle=None)  # assembled below
 def similarity_ivf_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-stage serving: the composed IVF+PQ system keeps its ADC top-
@@ -1128,25 +1120,8 @@ def similarity_ivf_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     query — a bounded, broadcastable join — so the 100 TB cost profile
     is still ADC's, while the ranking error of quantized-L2-vs-cosine
     affects only candidates BELOW the shortlist boundary."""
-    scored, persisted = _ivf_pq_scored(spark, sf_dir)
-    w = Window.partitionBy("q_id").orderBy("adc_d2", "neighbor_id")
-    shortlist = (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= RERANK_POOL)
-        .select(F.col("q_id").alias("vec_id"), "neighbor_id")
-        .localCheckpoint(eager=True)  # materialize before releasing caches
-    )
-    for df in persisted:
-        df.unpersist()
-    e = with_norms(load_table(spark, sf_dir, "embeddings"))
-    # the shortlist is bounded by construction (<= |query batch| x
-    # RERANK_POOL rows of two longs): broadcast it against the corpus
-    # neighbor side and broadcast the shortlist-derived query vectors —
-    # the exact rescore never shuffles the corpus at all (r12)
     return with_n_indexed(
-        _rank_topk(
-            candidate_cosines(e, shortlist, cand_bounded=True), PQ_NN_K
-        ),
+        _reranked(spark, sf_dir),
         load_table(spark, sf_dir, "embeddings"),
         FIXED_CELL_MAX_VECTORS,
     )
@@ -1211,9 +1186,11 @@ def similarity_rerank_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_rerank_recall() -> str:
+def _sql_rerank_recall(auto_cells: bool = False) -> str:
+    """Capped truth for the fixed-cell stack, batch-capped for auto."""
+    cap = None if auto_cells else FIXED_CELL_MAX_VECTORS
     return f"""
-    {_sql_rerank_ctes()},
+    {_sql_rerank_ctes(auto_cells=auto_cells)},
     annq AS (
       SELECT vec_id, neighbor_id FROM (
         SELECT vec_id, neighbor_id,
@@ -1224,7 +1201,7 @@ def _sql_rerank_recall() -> str:
         FROM rcos
       ) WHERE rnk <= {PQ_NN_K}
     ),
-    {_sql_recall_tail(FIXED_CELL_MAX_VECTORS)}
+    {_sql_recall_tail(cap, batch_cap=auto_cells)}
     """
 
 
@@ -1242,45 +1219,17 @@ def similarity_auto_rerank_recall(spark: SparkSession, sf_dir: str) -> DataFrame
     the RERANK_POOL-deep exact rescore buys back quantization error.
     Closing the symmetry also keeps the nprobe rule honest end-to-end —
     a probe count tuned only for the un-reranked gate could overfit it."""
-    scored, persisted = _ivf_pq_scored(spark, sf_dir, auto_cells=True)
-    w = Window.partitionBy("q_id").orderBy("adc_d2", "neighbor_id")
-    shortlist = (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= RERANK_POOL)
-        .select(F.col("q_id").alias("vec_id"), "neighbor_id")
-        .localCheckpoint(eager=True)  # materialize before releasing caches
+    ann = _reranked(spark, sf_dir, auto_cells=True).select(
+        "vec_id", "neighbor_id"
     )
-    for df in persisted:
-        df.unpersist()
-    e = with_norms(load_table(spark, sf_dir, "embeddings"))
-    # bounded shortlist (<= batch x RERANK_POOL): zero corpus-side
-    # exchanges in the exact rescore (see similarity_ivf_pq_rerank)
-    ann = _rank_topk(
-        candidate_cosines(e, shortlist, cand_bounded=True), PQ_NN_K
-    ).select("vec_id", "neighbor_id")
     return _recall_vs_exact(
         spark, sf_dir, ann, batch_cap=True, ann_bounded=True
     )
 
 
-def _sql_auto_rerank_recall() -> str:
-    return f"""
-    {_sql_rerank_ctes(auto_cells=True)},
-    annq AS (
-      SELECT vec_id, neighbor_id FROM (
-        SELECT vec_id, neighbor_id,
-               row_number() OVER (
-                 PARTITION BY vec_id
-                 ORDER BY {sql_round_half_up('cos', 4)} DESC, neighbor_id
-               ) AS rnk
-        FROM rcos
-      ) WHERE rnk <= {PQ_NN_K}
-    ),
-    {_sql_recall_tail(batch_cap=True)}
-    """
-
-
-_PQ_ORACLES["similarity_auto_rerank_recall"] = _sql_auto_rerank_recall()
+_PQ_ORACLES["similarity_auto_rerank_recall"] = _sql_rerank_recall(
+    auto_cells=True
+)
 
 
 # --------------------------------------------------------------------------

@@ -28,7 +28,10 @@ temp view over an eager ``localCheckpoint``, built on first use and read
 by every later query in the same session.  The view is named
 ``_PREFIX`` + slot name + a digest of ``sf_dir``; it shows in
 ``spark.catalog.listTables()``, dies with the session, and is invisible
-to any other session (``spark.newSession()`` builds its own).
+to any other session (``spark.newSession()`` builds its own).  A slot
+that holds one driver-side integer (``shared_count``, the IVF index's
+corpus size) is an inline ``VALUES`` view instead: the number lives in
+the view's definition, so reading it back launches no job.
 
 Discipline (this is a cache, so the rules are strict):
 
@@ -75,11 +78,34 @@ def shared_intermediate(
     module docstring) and registers it as a temp view; later calls read
     that view, cutting the rebuild out of every subsequent query in the
     family."""
-    digest = hashlib.sha1(sf_dir.encode()).hexdigest()[:10]
-    view = f"{_PREFIX}{name}_{digest}"
+    view = _view(sf_dir, name)
     if not spark.catalog.tableExists(view):
         build().localCheckpoint(eager=True).createOrReplaceTempView(view)
     return spark.table(view)
+
+
+def shared_count(
+    spark: SparkSession, sf_dir: str, name: str, build: Callable[[], int]
+) -> int:
+    """Return the session-scoped value of ``build()``, one integer the
+    driver already holds (a corpus size).
+
+    First call per (session, sf_dir, name) runs ``build`` and writes the
+    number into an inline ``VALUES`` temp view.  Later calls read it
+    back from the view's own definition, a local relation, so a hit
+    launches no Spark job, where a checkpointed slot costs one."""
+    view = _view(sf_dir, name)
+    if not spark.catalog.tableExists(view):
+        spark.sql(
+            f"CREATE OR REPLACE TEMP VIEW {view} AS "
+            f"SELECT * FROM VALUES ({int(build())}L) AS t(v)"
+        )
+    return spark.table(view).first().v
+
+
+def _view(sf_dir: str, name: str) -> str:
+    digest = hashlib.sha1(sf_dir.encode()).hexdigest()[:10]
+    return f"{_PREFIX}{name}_{digest}"
 
 
 def clear_shared_intermediates() -> None:

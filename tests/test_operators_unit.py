@@ -1057,10 +1057,10 @@ def test_ivf_delete_balance_and_tombstone_exclusion(spark, sf_dir):
 def test_ivf_auto_index_serves_one_member_table(spark, sf_dir, monkeypatch):
     """ivf_auto_index is the *_auto family's one index value: after a
     clear, ann_ivf_auto, ivf_pq_auto and ivf_delete build the two-level
-    member table ONCE between them, the session holds exactly three
-    ivf_auto_* slots (centroids, two-level index, members), the member
-    slot equals a cold build, and every query's rows equal its run
-    after a fresh clear."""
+    member table ONCE between them, the session holds exactly four
+    ivf_auto_* slots (corpus size, centroids, two-level index, members),
+    the member slot equals a cold build, and every query's rows equal
+    its run after a fresh clear."""
     from pyspark_text_classification_spark.all_queries import QUERIES
     from pyspark_text_classification_spark.operators import similarity
     from pyspark_text_classification_spark.plans.shared import (
@@ -1097,7 +1097,7 @@ def test_ivf_auto_index_serves_one_member_table(spark, sf_dir, monkeypatch):
         for t in spark.catalog.listTables()
         if t.isTemporary and t.name.startswith("shared_slot_ivf_auto_")
     }
-    assert len(slots) == 3, slots
+    assert len(slots) == 4, slots
     assert in_sequence == alone
 
     index = similarity.ivf_auto_index(spark, sf_dir)
@@ -1109,6 +1109,90 @@ def test_ivf_auto_index_serves_one_member_table(spark, sf_dir, monkeypatch):
     assert sorted(index.members.collect()) == sorted(cold.collect())
     assert builds["n"] == 1  # the index value read its slots
     index.e.unpersist()
+    clear_shared_intermediates()
+
+
+def test_search_serves_ann_ivf_auto(spark, sf_dir):
+    """search is the one probe -> candidates -> cosine -> rank path:
+    called on the index value with ann_ivf_auto's batch and probe count,
+    after a clear, it returns the registered query's rows exactly."""
+    from pyspark_text_classification_spark.all_queries import QUERIES
+    from pyspark_text_classification_spark.operators import similarity as S
+    from pyspark_text_classification_spark.plans.shared import (
+        clear_shared_intermediates,
+    )
+
+    clear_shared_intermediates()
+    want = sorted(QUERIES["similarity_ann_ivf_auto"](spark, sf_dir).collect())
+    clear_shared_intermediates()
+    index = S.ivf_auto_index(spark, sf_dir)
+    got = sorted(
+        S.search(
+            index, S.query_batch_ids(index.raw), S.auto_nprobe(index.cells)
+        ).collect()
+    )
+    assert want and got == want
+    clear_shared_intermediates()
+
+
+def test_warm_ivf_auto_index_reads_its_size(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The index value carries its sizes: a warm ivf_auto_index runs no
+    count over the embeddings, launches fewer jobs than the cold build,
+    and its n and cells equal the cold values — also on a 10-row corpus,
+    below IVF_AUTO_MIN_CELLS, where cells stays 16."""
+    import math
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from pyspark_text_classification_spark.operators import similarity as S
+    from pyspark_text_classification_spark.plans.shared import (
+        clear_shared_intermediates,
+    )
+    from pyspark_text_classification_spark.sources.parquet import load_table
+
+    tiny = tmp_path / "tiny"
+    tiny.mkdir()
+    vecs = np.random.default_rng(7).normal(size=(10, 8)).astype("float32")
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array(range(10), pa.int64()),
+                "embedding": pa.array(vecs.tolist(), pa.list_(pa.float32())),
+                "label": pa.array([i % 3 for i in range(10)], pa.int64()),
+            }
+        ),
+        str(tiny / "embeddings.parquet"),
+    )
+    sc = spark.sparkContext
+
+    def build(d, group):
+        sc.setJobGroup(group, group)
+        try:
+            index = S.ivf_auto_index(spark, d)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        index.e.unpersist()
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        return (index.n, index.cells), jobs
+
+    def no_count(self):
+        raise AssertionError("a warm ivf_auto_index counted a frame")
+
+    for d, want_cells in ((sf_dir, None), (str(tiny), 16)):
+        n = load_table(spark, d, "embeddings").count()
+        clear_shared_intermediates()
+        cold, cold_jobs = build(d, f"cold-index-{d}")
+        with monkeypatch.context() as m:
+            m.setattr(DataFrame, "count", no_count)
+            warm, warm_jobs = build(d, f"warm-index-{d}")
+        assert cold == warm == (n, max(S.IVF_AUTO_MIN_CELLS, math.isqrt(n)))
+        assert want_cells is None or warm[1] == want_cells
+        assert warm_jobs < cold_jobs, (warm_jobs, cold_jobs)
     clear_shared_intermediates()
 
 

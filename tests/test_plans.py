@@ -931,16 +931,17 @@ def test_round7_ivf_assignment_windowgrouplimit_partial(spark, sf_dir):
     vec_id and the assignment shuffle carries ~n x nprobe rows, not the
     n x cells cosine stream.  A refactor that persists the unfiltered
     rank stream (the round-6 ann_ivf_auto shape) silently reintroduces
-    the n^(3/2)-row exchange; this assertion is what catches it."""
-    import re
-
-    from pyspark.sql import functions as F
-
+    the n^(3/2)-row exchange; this assertion is what catches it.  The
+    same holds for ``probe``, the serving family's one query-batch
+    assignment over the index value."""
     from pyspark_text_classification_spark.operators.similarity import (
         auto_cells,
         auto_centroids,
         auto_nprobe,
         ivf_assignment,
+        ivf_auto_index,
+        probe,
+        query_batch_ids,
         with_norms,
     )
     from pyspark_text_classification_spark.plans.explain import formatted_plan
@@ -949,7 +950,19 @@ def test_round7_ivf_assignment_windowgrouplimit_partial(spark, sf_dir):
     e = with_norms(load_table(spark, sf_dir, "embeddings"))
     cells = auto_cells(load_table(spark, sf_dir, "embeddings"))
     nprobe = auto_nprobe(cells)
-    plan = formatted_plan(ivf_assignment(e, auto_centroids(e, cells=cells), nprobe))
+    index = ivf_auto_index(spark, sf_dir)
+    assert index.cells == cells
+    plans = (
+        formatted_plan(ivf_assignment(e, auto_centroids(e, cells=cells), nprobe)),
+        formatted_plan(probe(index, query_batch_ids(index.raw), nprobe)),
+    )
+    index.e.unpersist()
+    for plan in plans:
+        _assert_partial_below_exchange(plan, nprobe)
+
+
+def _assert_partial_below_exchange(plan: str, nprobe: int) -> None:
+    import re
 
     partials = re.findall(
         r"Arguments: \[[^\]]*\], \[[^\]]*\], row_number\(\), (\d+), Partial",
